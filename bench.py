@@ -108,18 +108,20 @@ def main() -> None:
     # value / unit / queries / sf) is ~0.7 kB; the optional "arms"
     # attribution block is what grows. Keep arms inline only while the
     # full line stays under a size guard, and ALWAYS mirror the full
-    # record to a file next to this script so the per-arm numbers
-    # survive even when stdout is truncated or unparsed. Timings and
-    # methodology are unchanged — this is output plumbing only.
+    # record to the git-ignored .localdata/ next to this script so the
+    # per-arm numbers survive even when stdout is truncated or
+    # unparsed. Timings and methodology are unchanged — this is output
+    # plumbing only.
     if len(line) > 8000:
         out.pop("arms", None)
         line = json.dumps(out)
     try:
         full = dict(out, arms=arm_timings) if arm_timings else out
-        mirror = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_LAST.json"
+        mirror_dir = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), ".localdata"
         )
-        with open(mirror, "w") as fh:
+        os.makedirs(mirror_dir, exist_ok=True)
+        with open(os.path.join(mirror_dir, "BENCH_LOCAL_LAST.json"), "w") as fh:
             json.dump(full, fh)
     except OSError:
         pass  # read-only checkout: stdout line is still the contract

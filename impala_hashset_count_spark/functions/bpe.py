@@ -130,11 +130,6 @@ def bpe_encode_sql(expr: str, merges: list[tuple[str, str]] | None = None) -> st
     return s
 
 
-def bpe_token_count_sql(expr: str, merges: list[tuple[str, str]] | None = None) -> str:
-    enc = bpe_encode_sql(expr, merges)
-    return f"CAST(LENGTH({enc}) - LENGTH(REPLACE({enc}, '<', '')) AS INTEGER)"
-
-
 # ---------------------------------------------------------------------
 # Pure-Python reference encoder (test oracle + driver-side use)
 # ---------------------------------------------------------------------

@@ -214,19 +214,6 @@ def shingle_sets(
     return toks.select(F.col(id_col), _shingle_expr(n, hashed=False).alias("sh")).distinct()
 
 
-def hashed_shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, hashed-shingle) distinct rows — the exploded view of
-    ``doc_shingle_arrays`` (already per-doc distinct). A 64-bit
-    collision (~1e-7 at 10^6 shingles) only perturbs an
-    already-probabilistic candidate set, so hashed shingles are
-    reserved for the LSH tier while the exact tier keeps string
-    equality."""
-    docs = doc_shingle_arrays(df, id_col, text_col, n)
-    return docs.select(F.col(id_col), F.explode("shs").alias("sh"))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -329,14 +316,21 @@ def edit_distance_pairs(
     corpus pass it here, so one shingle self-join serves both tiers.
     The inner prefix joins below restrict to ids present in ``df``,
     and pairs' Jaccard values are corpus-independent, so the verified
-    output is identical."""
-    cand = (
-        candidates.select("id_1", "id_2")
-        if candidates is not None
-        else ngram_jaccard_pairs(
+    output is identical. ``n``, ``candidate_threshold`` and
+    ``max_shingle_docs`` shape only the internal candidate pass, so
+    passing a non-default value of any of them together with
+    ``candidates`` raises ``ValueError``."""
+    if candidates is not None:
+        if (n, candidate_threshold, max_shingle_docs) != (3, 0.3, None):
+            raise ValueError(
+                "n, candidate_threshold and max_shingle_docs have no "
+                "effect when candidates is given"
+            )
+        cand = candidates.select("id_1", "id_2")
+    else:
+        cand = ngram_jaccard_pairs(
             df, id_col, text_col, n, candidate_threshold, max_shingle_docs
         ).select("id_1", "id_2")
-    )
     t = df.select(
         F.col(id_col).alias("_eid"),
         F.substring(F.col(text_col), 1, prefix).alias("_pfx"),

@@ -1321,8 +1321,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.lit("minhash").alias("tag"), "id_1", "id_2", "jaccard")
     ascii_docs = d.filter(F.length("text") == F.octet_length("text"))
     ed = edit_distance_pairs(
-        ascii_docs, "doc_id", "text", n=3,
-        candidate_threshold=0.3, prefix=256, min_sim=0.4,
+        ascii_docs, "doc_id", "text", prefix=256, min_sim=0.4,
         candidates=scored.select("id_1", "id_2"),
     ).select(
         F.lit("edit").alias("tag"), "id_1", "id_2",

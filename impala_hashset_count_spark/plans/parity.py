@@ -71,62 +71,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # The reference's own operator family (SURVEY.md §2.1)
 # =====================================================================
 
-def multi_distinct_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state twin of ``multi_distinct_lineitem`` — same result,
-    Expand-free physical plan for the regime the sf100 measurement
-    exposed (ROUND6_NOTES §8): Catalyst's multi-distinct rewrite dedups
-    (group, value) pairs in the MAP-side partial aggregate, whose hash
-    state is input-split-determined — at 600M rows / ~45M distinct
-    pairs every scan task carries a near-full shard of the pair
-    universe on one heap (GC pressure in local mode; on a cluster,
-    executor-memory sizing pressure).
-
-    This variant chooses the other side of the classic trade: shuffle
-    RAW (group, column_id, value) rows first — ``stack`` is the manual
-    Expand, the explicit ``repartition`` on the full dedup key moves
-    the Exchange BELOW both aggregates — so the dedup hash state any
-    single task holds is exactly one shuffle partition's shard
-    (total_pairs / spark.sql.shuffle.partitions), tunable at submit
-    time, at the cost of shuffling 3x raw rows instead of partially
-    deduped pairs. At high per-group NDV the map-side dedup buys
-    little compression anyway (most pairs are unique within a split),
-    so the extra shuffle volume is near-free while the state cap is
-    real. NULL handling matches COUNT(DISTINCT ...): NULL values ride
-    the shuffle but are excluded from the distinct counts; ``n_rows``
-    is the SUM of the cid=0 branch's pre-dedup multiplicities, NULLs
-    included."""
-    li = _t(spark, sf_dir, "lineitem")
-    ex = li.select(
-        "l_returnflag",
-        F.expr(
-            "stack(3, 0, l_partkey, 1, l_suppkey, 2, l_orderkey)"
-        ).alias("cid", "v"),
-    )
-    ded = (
-        ex.repartition("l_returnflag", "cid", "v")
-        .groupBy("l_returnflag", "cid", "v")
-        .agg(F.count("*").alias("c"))
-    )
-    return ded.groupBy("l_returnflag").agg(
-        F.count(F.when((F.col("cid") == 0) & F.col("v").isNotNull(), True))
-        .alias("distinct_parts"),
-        F.count(F.when((F.col("cid") == 1) & F.col("v").isNotNull(), True))
-        .alias("distinct_supps"),
-        F.count(F.when((F.col("cid") == 2) & F.col("v").isNotNull(), True))
-        .alias("distinct_orders"),
-        F.sum(F.when(F.col("cid") == 0, F.col("c")))
-        .cast("long")
-        .alias("n_rows"),
-    )
-
-
 def multi_distinct_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Catalyst-NATIVE face of the flagship workload: N distinct
-    aggregates declared directly; Catalyst rewrites them via one
-    Expand + partial/final hash agg, so a single scan serves all three
-    counts. Kept as a certified arm (the native rewrite is itself part
-    of the §2 parity surface); the registered default is the
-    bounded-state twin — see ``multi_distinct_lineitem``."""
+    """Several exact distinct counts declared directly in one
+    ``groupBy``. Catalyst's ``RewriteDistinctAggregates`` turns them
+    into one Expand under a partial/final hash aggregate, so a single
+    lineitem scan serves all three counts plus ``count(*)``."""
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count_distinct("l_partkey").alias("distinct_parts"),
@@ -149,23 +98,14 @@ def multi_distinct_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     headline=True,
     arms={"expand": multi_distinct_expand},
-    default_arm="twophase",
 )
 def multi_distinct_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP — the reference's motivating workload: multiple exact
-    distinct counts in ONE grouped pass (`/root/reference/README.md:1`).
-    Impala could not do this. The registered default is the
-    BOUNDED-STATE two-phase plan (``multi_distinct_twophase``): the r6
-    sf100 measurement showed Catalyst's Expand rewrite deduping
-    (group, value) pairs in map-side partial aggregates whose hash
-    state is input-split-determined — at 600M rows every scan task
-    carries a near-full shard of the ~45M-pair universe on one heap —
-    while the twin's per-task state is one shuffle partition's shard.
-    Promoted to the default in r9 after winning at BOTH measured ends:
-    0.803 vs 1.02 s at sf0.1 and 180.7 vs 229.9 s at sf100
-    (ROUND9_NOTES). The Catalyst-native Expand plan stays certified as
-    the ``expand`` arm."""
-    return multi_distinct_twophase(spark, sf_dir)
+    distinct counts in ONE grouped pass (reference `README.md:1`), which
+    Impala could not plan. Spark plans it natively, so the entry
+    is Catalyst's plan, ``multi_distinct_expand``. The ``expand`` arm
+    names the same builder so per-arm timings keep a stable key."""
+    return multi_distinct_expand(spark, sf_dir)
 
 
 @register(
@@ -485,24 +425,34 @@ def _bmd_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hct_auto_inputs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    # The three routed inputs, one per region of the decision space: a
+    # dense integer id (bitmap), a string key under a low threshold
+    # (spillable at bench SFs) and document text under the reference's
+    # own 300k boundary (faithful at bench SFs).
+    li = _t(spark, sf_dir, "lineitem").select("l_linestatus", "l_partkey")
+    ev = _t(spark, sf_dir, "events").select(
+        "event_type", F.col("user_id").cast("string").alias("uid")
+    )
+    d = _t(spark, sf_dir, "documents").select("lang", "text")
+    return li, ev, d
+
+
+def _hct_auto_routed(li, ev, d, st_li, st_ev, st_d) -> DataFrame:
     # 'auto[<route>]_*' rows — ADAPTIVE tier routing
     # (operators/auto_route.py): the engine picks the physical tier
-    # (bitmap / spillable codegen distinct / faithful UDAF) from ONE
-    # deterministic stats job, the way AQE picks join strategies — the
+    # (bitmap / spillable codegen distinct / faithful UDAF) from each
+    # input's RouteStats, the way AQE picks join strategies — the
     # executable form of the reference's prose capacity advice
     # (`README.md:10-11`). The chosen route is BAKED INTO the tier
     # string, so the driver hash certifies the routing DECISION (the
     # oracle recomputes the stats and the branch arithmetic verbatim)
-    # as well as the routed counts. Three inputs exercise the decision
-    # space: a dense integer id (bitmap), a string key under a low
-    # threshold (spillable at bench SFs), and document text under the
-    # reference's own 300k boundary (faithful at bench SFs) — at
-    # larger SFs a route may legitimately flip, and the oracle flips
-    # with it, because both sides compute the same arithmetic.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.auto_route import auto_route_stats, hashset_count_auto
+    # as well as the routed counts. At larger SFs a route may
+    # legitimately flip, and the oracle flips with it, because both
+    # sides compute the same arithmetic.
+    from ..operators.auto_route import hashset_count_auto
 
     def tag(pair, name, gcol):
         df, route = pair
@@ -512,26 +462,6 @@ def _hct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hashset_count",
         )
 
-    li = _t(spark, sf_dir, "lineitem").select("l_linestatus", "l_partkey")
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.col("user_id").cast("string").alias("uid")
-    )
-    d = _t(spark, sf_dir, "documents").select("lang", "text")
-    # The three stats prerequisites are INDEPENDENT one-row jobs on
-    # three different tables; submitting them from a small thread pool
-    # overlaps them (optimization guide §2.6) instead of paying three
-    # serial driver round-trips — each RouteStats value (and hence each
-    # routing decision and the driver hash) is unchanged. Measured
-    # r9 at sf0.1 (interleaved in-session A/B): arm 2.75 -> 2.05 s
-    # warm min-of-5. (A single-action variant — union the three one-row
-    # aggregates, collect once — was ALSO measured r9 and is ~8% slower
-    # than the three overlapped jobs: the union plan's stage waves wait
-    # for all three subtrees where independent jobs finish alone.)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        st_li = pool.submit(auto_route_stats, li, ["l_linestatus"], "l_partkey")
-        st_ev = pool.submit(auto_route_stats, ev, ["event_type"], "uid")
-        st_d = pool.submit(auto_route_stats, d, ["lang"], "text")
-        st_li, st_ev, st_d = st_li.result(), st_ev.result(), st_d.result()
     return (
         tag(
             hashset_count_auto(li, ["l_linestatus"], "l_partkey", stats=st_li),
@@ -554,66 +484,57 @@ def _hct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Routes from ONE deterministic stats job per input. The three
+    # stats prerequisites are INDEPENDENT one-row jobs on three
+    # different tables; submitting them from a small thread pool
+    # overlaps them (optimization guide §2.6) instead of paying three
+    # serial driver round-trips — each RouteStats value (and hence each
+    # routing decision and the driver hash) is unchanged. A
+    # single-action variant (union the three one-row aggregates,
+    # collect once) is ~8% slower than the three overlapped jobs: the
+    # union plan's stage waves wait for all three subtrees where
+    # independent jobs finish alone.
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..operators.auto_route import auto_route_stats
+
+    li, ev, d = _hct_auto_inputs(spark, sf_dir)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        st_li = pool.submit(auto_route_stats, li, ["l_linestatus"], "l_partkey")
+        st_ev = pool.submit(auto_route_stats, ev, ["event_type"], "uid")
+        st_d = pool.submit(auto_route_stats, d, ["lang"], "text")
+        stats = st_li.result(), st_ev.result(), st_d.result()
+    return _hct_auto_routed(li, ev, d, *stats)
+
+
 def _hct_auto_given_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The PRODUCTION face of the router: RouteStats arrive from a
     # maintained catalog (ANALYZE-style table stats or the repo's
-    # stored sketch tables) instead of a fresh stats scan per query.
-    # This arm exists to MEASURE that face (r7 verdict #5): the `auto`
-    # arm's bench time is dominated by its three stats-prerequisite
-    # jobs, which production amortizes across queries — with stats
-    # given, routing is pure driver-side integer arithmetic and the
-    # arm must cost roughly the routed tiers alone. The literals below
-    # are what a catalog would serve at the bench SFs — they pick the
-    # SAME routes the live stats job picks there (bitmap / spillable /
+    # stored sketch tables) instead of a fresh stats scan per query,
+    # so routing is pure driver-side integer arithmetic and the arm
+    # costs roughly the routed tiers alone. The literals below are what
+    # a catalog would serve at the bench SFs — they pick the SAME
+    # routes the live stats job picks there (bitmap / spillable /
     # faithful, the full decision space); a stale catalog row can only
     # mis-route, never mis-count (all tiers are exact), which is why
     # serving cached stats is safe at 100 TB (auto_route.py docstring).
-    from ..operators.auto_route import RouteStats, hashset_count_auto
+    from ..operators.auto_route import RouteStats
 
-    def tag(pair, name, gcol):
-        df, route = pair
-        return df.select(
-            F.lit(f"auto[{route}]_{name}").alias("tier"),
-            F.col(gcol).alias("group_key"),
-            "hashset_count",
-        )
-
-    li = _t(spark, sf_dir, "lineitem").select("l_linestatus", "l_partkey")
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.col("user_id").cast("string").alias("uid")
-    )
-    d = _t(spark, sf_dir, "documents").select("lang", "text")
-    li_stats = RouteStats(
-        nnz=600_000, smax=300, vmin=1, vmax=20_000,
-        integral=True, sample_shift=6,
-    )
-    ev_stats = RouteStats(
-        nnz=100_000, smax=150, vmin=None, vmax=None,
-        integral=False, sample_shift=6,
-    )
-    d_stats = RouteStats(
-        nnz=5_000, smax=70, vmin=None, vmax=None,
-        integral=False, sample_shift=6,
-    )
-    return (
-        tag(
-            hashset_count_auto(li, ["l_linestatus"], "l_partkey", stats=li_stats),
-            "lineitem", "l_linestatus",
-        )
-        .union(
-            tag(
-                hashset_count_auto(
-                    ev, ["event_type"], "uid", ndv_threshold=200, stats=ev_stats
-                ),
-                "events", "event_type",
-            )
-        )
-        .union(
-            tag(
-                hashset_count_auto(d, ["lang"], "text", stats=d_stats),
-                "documents", "lang",
-            )
-        )
+    return _hct_auto_routed(
+        *_hct_auto_inputs(spark, sf_dir),
+        RouteStats(
+            nnz=600_000, smax=300, vmin=1, vmax=20_000,
+            integral=True, sample_shift=6,
+        ),
+        RouteStats(
+            nnz=100_000, smax=150, vmin=None, vmax=None,
+            integral=False, sample_shift=6,
+        ),
+        RouteStats(
+            nnz=5_000, smax=70, vmin=None, vmax=None,
+            integral=False, sample_shift=6,
+        ),
     )
 
 

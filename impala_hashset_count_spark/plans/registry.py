@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass(frozen=True)
 class Query:
+    """One registry entry: a Spark plan builder and its DuckDB oracle.
+
+    ``fn`` is the entry's plan; ``arms`` optionally names further
+    standalone plans that ``bench.py`` times one by one to attribute an
+    entry's time to its parts. An arm rebuilds any sub-plan it shares
+    with the entry, so arm times need not sum to the entry time, and an
+    arm may name the entry's own builder to keep a stable timing key.
+    """
+
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     #: ANSI SQL DuckDB can run over the pre-registered table views.
@@ -23,23 +32,8 @@ class Query:
     oracle: str | None
     #: Included in bench.py's measured set.
     headline: bool
-    #: Optional per-arm builders for multi-arm entries: arm name ->
-    #: (spark, sf_dir) -> DataFrame. bench.py times each arm
-    #: separately so a growth in the entry's total can be ATTRIBUTED
-    #: (scope growth in one arm vs a regression in another). Arm plans
-    #: are standalone — they rebuild any plan the entry shares across
-    #: arms — so arm times need not sum to the entry time.
+    #: Arm name -> (spark, sf_dir) -> DataFrame.
     arms: dict[str, Callable[[SparkSession, str], DataFrame]] | None = None
-    #: Stable label naming WHICH plan the entry's default ``fn`` is,
-    #: for entries whose default delegates to one of several named
-    #: variants (e.g. the flagship's ``twophase`` promotion in r9).
-    #: Floor files record this map at floor time and
-    #: tests/test_registry_lint.py asserts the NEWEST floor file still
-    #: matches the registry — so promoting a different variant to the
-    #: default forces a floor re-record instead of silently timing the
-    #: old plan (the r7 verdict's drift class). None => the default
-    #: plan is identified by the entry name itself.
-    default_arm: str | None = None
 
 
 REGISTRY: dict[str, Query] = {}
@@ -50,7 +44,6 @@ def register(
     oracle: str | None = None,
     headline: bool = False,
     arms: dict[str, Callable[[SparkSession, str], DataFrame]] | None = None,
-    default_arm: str | None = None,
 ):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
@@ -68,8 +61,7 @@ def register(
         tuned.__name__ = fn.__name__
         tuned.__doc__ = fn.__doc__
         REGISTRY[name] = Query(
-            name=name, fn=tuned, oracle=oracle, headline=headline,
-            arms=arms, default_arm=default_arm,
+            name=name, fn=tuned, oracle=oracle, headline=headline, arms=arms
         )
         return fn
 

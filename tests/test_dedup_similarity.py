@@ -644,6 +644,12 @@ def test_edit_distance_pairs_planted_near_dups(spark):
     assert 0.9 < rows[(1, 2)] < 1.0
     assert not any(4 in p for p in rows)
 
+    # given candidates, the candidate-pass parameters would be ignored
+    cands = spark.createDataFrame([(1, 2)], "id_1 bigint, id_2 bigint")
+    for bad in ({"n": 4}, {"candidate_threshold": 0.1}, {"max_shingle_docs": 10}):
+        with pytest.raises(ValueError):
+            edit_distance_pairs(df, "doc_id", "text", candidates=cands, **bad)
+
 
 def test_edit_distance_pairs_prefix_bounds_cost(spark):
     """Documents differing only beyond the prefix are identical at the

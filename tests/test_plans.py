@@ -50,51 +50,17 @@ def test_topk_plans_rank_limit_pushdown_and_topn(spark):
 
 
 def test_multi_distinct_expand_arm_is_single_pass(spark):
-    # the Catalyst-native arm: N DISTINCT aggregates rewritten via one
-    # Expand node — the native face of the reference operator, kept
-    # certified as an arm after the r9 default promotion
+    # N DISTINCT aggregates rewritten by Catalyst via one Expand node
+    # over one parquet scan — for the arm and the registered entry
+    import re
+
     from impala_hashset_count_spark.plans.parity import multi_distinct_expand
 
-    plan = explain_str(multi_distinct_expand(spark, SF))
-    assert "Expand" in plan
-    import re
-
-    scans = re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M)
-    assert len(scans) == 1
-
-
-def test_multi_distinct_twophase_is_expand_free_bounded_state(spark):
-    # the bounded-state DEFAULT (promoted r9 — wins at sf0.1 AND
-    # sf100): no Catalyst Expand; the dedup key's Exchange sits BELOW
-    # the dedup aggregate (explicit repartition), so any one task's
-    # dedup hash state is one shuffle partition's shard, not a
-    # map-side near-full NDV scan shard
-    from impala_hashset_count_spark.plans.parity import multi_distinct_twophase
-
-    df = multi_distinct_twophase(spark, SF)
-    plan = explain_str(df)
-    assert "Expand" not in plan
-    import re
-
-    scans = re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M)
-    assert len(scans) == 1
-    # raw-row shuffle on the full dedup key is present (formatted mode
-    # puts the partitioning on the Exchange node's Arguments line)
-    assert re.search(
-        r"hashpartitioning\(l_returnflag#\d+, cid#\d+, v#\d+.*REPARTITION_BY_COL",
-        plan,
-    ), plan
-
-
-def test_multi_distinct_twophase_matches_expand_plan(spark):
-    from impala_hashset_count_spark.plans.parity import multi_distinct_twophase
-
-    a = sorted(
-        tuple(r)
-        for r in all_queries()["multi_distinct_lineitem"].fn(spark, SF).collect()
-    )
-    b = sorted(tuple(r) for r in multi_distinct_twophase(spark, SF).collect())
-    assert a == b
+    for fn in (multi_distinct_expand, all_queries()["multi_distinct_lineitem"].fn):
+        plan = explain_str(fn(spark, SF))
+        assert "Expand" in plan
+        scans = re.findall(r"^\(\d+\) Scan parquet", plan, flags=re.M)
+        assert len(scans) == 1
 
 
 def test_faithful_udaf_preceded_by_jvm_distinct(spark):

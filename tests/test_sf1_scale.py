@@ -363,25 +363,6 @@ def test_sf1_stream_span_dedup_at_volume(spark, tmp_path):
     assert idx.count() == direct.count()
 
 
-def test_sf1_multi_distinct_twophase_equals_expand_at_volume(spark):
-    """The bounded-state twin (manual stack + raw-row shuffle, Expand-
-    free) must reproduce the Catalyst multi-distinct result exactly at
-    volume — the regime it exists for: at sf100 the Expand plan's
-    map-side partial dedup holds a near-full shard of the ~45M-pair
-    universe per scan task on one heap (ROUND6_NOTES §8); the twin's
-    per-task state is one shuffle partition's shard."""
-    from impala_hashset_count_spark.plans.parity import (
-        multi_distinct_lineitem,
-        multi_distinct_twophase,
-    )
-
-    a = sorted(tuple(r) for r in multi_distinct_lineitem(spark, SF1).collect())
-    b = sorted(tuple(r) for r in multi_distinct_twophase(spark, SF1).collect())
-    assert a == b
-    # volume witness: the inputs really are the scaled corpus
-    assert sum(r[-1] for r in a) >= 6_000_000
-
-
 def test_sf1_minhash_hot_shingle_guard_bounds_verification(spark):
     """The verification-stage document-frequency guard (r7 verdict #2)
     observed at adversarial volume: a corpus of 10k docs where ONE

@@ -59,8 +59,8 @@ def main() -> None:
 
     # A floor file must time ONE set of definitions: if the query or
     # arm key sets differ across invocations, someone changed the
-    # registry mid-recording (the r8 file's twophase/expand drift) —
-    # fail loudly instead of emitting a file that needs a footnote.
+    # registry mid-recording — fail loudly instead of emitting a file
+    # that needs a footnote.
     for kind in ("queries", "arms"):
         keysets = [frozenset(r.get(kind, {})) for r in runs]
         if len(set(keysets)) > 1:
@@ -78,18 +78,6 @@ def main() -> None:
         arms = {
             a: min(r["arms"][a] for r in runs) for a in runs[0]["arms"]
         }
-    # Record which named variant each entry's DEFAULT plan is at floor
-    # time (registry default_arm labels): the registry lint compares
-    # the newest floor file's map against the live registry, so a
-    # default promotion forces a re-record (r7 verdict's drift class).
-    sys.path.insert(0, REPO)
-    from impala_hashset_count_spark.plans import all_queries
-
-    defaults = {
-        name: q.default_arm
-        for name, q in all_queries().items()
-        if q.default_arm is not None
-    }
     artifact = {
         "comment": comment,
         "sf": runs[0]["sf"],
@@ -98,7 +86,6 @@ def main() -> None:
         "floors": floors,
         "floor_total": round(sum(floors.values()), 3),
         "arms": arms,
-        "defaults": defaults,
     }
     with open(out_path, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=False)
