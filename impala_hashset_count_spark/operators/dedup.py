@@ -31,41 +31,13 @@ Scale analysis (100 TB, ~10^10 docs):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
-
-
-#: Inputs at or above this estimated size are left alone by ``_spread``
-#: — their scans already carry enough splits, and a round-robin
-#: repartition would shuffle the whole text payload for nothing.
-_SPREAD_MAX_BYTES = 1 << 30
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure core-count parallelism before CPU-heavy per-row expression
-    work (shingling, k x xxhash64 signatures) on SMALL inputs.
-
-    The driver testdata parquet is a single row group per file, so no
-    scan-split conf can parallelize it — the only way to spread the CPU
-    work is one explicit repartition of the (small) payload. The gate is
-    Catalyst's plan-stats size estimate, read driver-side with no job
-    and no ``df.rdd`` conversion (the former partition-count probe
-    forced a separate physical planning of the input per call): inputs
-    >= 1 GiB are returned untouched, so at 100 TB this never shuffles —
-    the scan itself already has thousands of splits."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - non-JVM sessions (connect)
-        return df
-    if size < _SPREAD_MAX_BYTES:
-        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return df
+from ..sources.tables import plan_bytes, spread_small
 
 
 #: Inputs at or above this estimated size flip the LOCAL checkpoint
@@ -77,23 +49,10 @@ def _spread(df: DataFrame) -> DataFrame:
 #: deserialized block must be BUILT in memory before it can spill.
 #: DISK_ONLY streams each block serialized to local disk instead (the
 #: optimization guide §5 posture for large reused intermediates). The
-#: gate reads the INPUT's optimizer size estimate (for a parquet scan:
-#: file bytes — the same driver-side no-job probe ``_spread`` uses), so
-#: bench-SF behavior is byte-identical and only genuinely large runs
-#: pay the serialization. Env-overridable for scale tests.
-_CKPT_DISK_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CKPT_DISK_MIN_BYTES", str(1 << 29))
-)
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df``, read driver-side with no job
-    (exact file bytes for a bare scan; an estimate above it). -1 when
-    the session exposes no JVM plan (connect)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - non-JVM sessions
-        return -1
+#: gate reads the INPUT's optimizer size estimate (``plan_bytes``; for
+#: a parquet scan: file bytes), so bench-SF behavior is byte-identical
+#: and only genuinely large runs pay the serialization.
+_CKPT_DISK_MIN_BYTES = 1 << 29
 
 
 def _eager_checkpoint(
@@ -208,7 +167,7 @@ def shingle_sets(
     Tokenization is materialized as a column BEFORE the shingle lambda:
     inlining ``split()`` into the transform re-evaluates the split per
     shingle (O(tokens^2) measured 4.7x slower at sf0.1)."""
-    toks = _spread(df).select(
+    toks = spread_small(df).select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
     )
     return toks.select(F.col(id_col), _shingle_expr(n, hashed=False).alias("sh")).distinct()
@@ -373,7 +332,7 @@ def doc_shingle_arrays(
 
     SQL-text lambda (not Python) per the HOF canonicalization pitfall
     documented at ``_sig_expr``."""
-    toks = _spread(df).select(
+    toks = spread_small(df).select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
     )
     elts = ", ".join(f"element_at(__toks, i + {j})" for j in range(n))
@@ -710,7 +669,7 @@ def minhash_lsh_pairs(
     # Above the gate (large inputs only — see _CKPT_DISK_MIN_BYTES) the
     # reused intermediates store serialized on disk instead of as
     # deserialized heap blocks: identical results, no sf100 heap cliff.
-    spill_safe = _plan_bytes(df) >= _CKPT_DISK_MIN_BYTES
+    spill_safe = plan_bytes(df) >= _CKPT_DISK_MIN_BYTES
     docs = doc_shingle_arrays(df, id_col, text_col, n, hash_fn=hash_fn)
     if spill_safe:
         from pyspark.storagelevel import StorageLevel
@@ -879,7 +838,7 @@ def minhash_lsh_pairs_incremental(
     deterministic hashes, same verification)."""
     # Gate on new batch + stored index size (see _CKPT_DISK_MIN_BYTES).
     spill_safe = (
-        max(_plan_bytes(new_df), _plan_bytes(stored_docs))
+        max(plan_bytes(new_df), plan_bytes(stored_docs))
         >= _CKPT_DISK_MIN_BYTES
     )
     new_docs = doc_shingle_arrays(new_df, id_col, text_col, n, hash_fn=hash_fn)
@@ -1263,7 +1222,7 @@ def simhash_signatures(
             return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    toks = _spread(df).select(
+    toks = spread_small(df).select(
         F.col(id_col),
         F.transform(
             F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: tok_hash(t)

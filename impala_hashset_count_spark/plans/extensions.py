@@ -70,7 +70,7 @@ from ..operators.sampling import (
     temperature_mix,
 )
 from ..operators.similarity import brute_force_topk, ivf_topk, lsh_topk, pq_topk
-from ..sources.tables import load_table, register_views, widen_small_scan
+from ..sources.tables import load_table, register_views, spread_small
 from .registry import register
 
 
@@ -303,13 +303,13 @@ def text_analysis_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_shingles,
     )
 
-    # Scale-adaptive scan widening (r9): this single fused projection
-    # is the most per-row-CPU-expensive plan in the registry and has NO
+    # Small-input spreading (r9): this single fused projection is the
+    # most per-row-CPU-expensive plan in the registry and has NO
     # Exchange of its own, so on the single-row-group bench files the
     # WHOLE query ran as one task (measured 3.43 s warm at sf0.1 on 32
-    # cores; 0.79-1.0 s widened). At production row-group counts
-    # widen_small_scan is a no-op and the plan is unchanged.
-    d = widen_small_scan(_t(spark, sf_dir, "documents"), sf_dir, "documents")
+    # cores; 0.79-1.0 s spread). Above spread_small's size cap the
+    # plan is unchanged.
+    d = spread_small(_t(spark, sf_dir, "documents"))
     s1 = d.select(
         "doc_id", "lang", "text", "source", tokens("text").alias("__toks")
     )
@@ -935,15 +935,10 @@ def _des_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _des_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
     dt = _des_dt(spark, sf_dir)
     eval_slice = dt.filter(F.col("doc_id") % 20 == 0)
-    # the documents table is ONE small parquet file locally, so the
-    # scan yields one partition and the shingle projection (the
-    # expensive stage) would run on one core; a cheap row-count
-    # repartition restores the parallelism a real many-file corpus
-    # scan has natively (at 100 TB this repartition is a no-op to
-    # delete — the scan is already thousands of partitions)
-    corpus = dt.filter(F.col("doc_id") % 20 != 0).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # the shingle projection is the expensive stage; a small corpus
+    # scan is one task, so spread_small spreads it to core count (above
+    # its size cap the corpus scan keeps its own splits, no shuffle)
+    corpus = spread_small(dt.filter(F.col("doc_id") % 20 != 0))
     return contamination_stats(
         corpus, eval_slice, "doc_id", "text", n=8
     ).filter("contaminated").select(
@@ -1026,18 +1021,16 @@ def _des_html(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _des_xsub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Scale-adaptive scan widening (r9, same rationale as
+    # Small-input spreading (r9, same rationale as
     # text_analysis_documents): the gram explode + per-doc windows in
     # duplicated_spans are the most per-row-CPU-expensive hygiene
     # branch, and on the single-row-group bench files their pre-shuffle
     # stage ran as ONE task (measured 3.25 s -> 2.22 s min-of-4 at
     # sf0.1 on 32 cores, cold first run 11.6 s -> 3.9 s). Applied to
     # THIS branch only — the other hygiene branches are
-    # aggregation-first, where the r9 A/B showed widening inverts the
-    # map-side shrink. No-op at production row-group counts.
-    dt = widen_small_scan(
-        _des_dt(spark, sf_dir), sf_dir, "documents"
-    )
+    # aggregation-first, where the r9 A/B showed spreading inverts the
+    # map-side shrink. No-op above spread_small's size cap.
+    dt = spread_small(_des_dt(spark, sf_dir))
     spans = duplicated_spans(dt, min_tokens=8, hash_fn="md5").select(
         F.lit("xsub").alias("tag"),
         "doc_id",
@@ -2891,29 +2884,6 @@ def _cs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "documents")
 
 
-#: Documents-table footer bytes at or above which the corpus entry's
-#: shared ``term_doc_stats`` frame is persisted (serialized DISK_ONLY)
-#: so its three consumers (tfidf / toptok / unigram_lp) pay ONE corpus
-#: explode instead of three. Below the gate (every bench SF) the plan
-#: is byte-identical to the unpersisted form — the r9 A/B measured the
-#: persist ~40% SLOWER at sf0.1, where cache write+read overhead
-#: exceeds the re-scan. Same input-layout-derived gating discipline as
-#: ``widen_small_scan``; env-overridable for scale tests.
-_CS_TF_PERSIST_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CS_TF_PERSIST_MIN_BYTES", str(1 << 28))
-)
-
-
-def _cs_table_bytes(sf_dir: str) -> int:
-    """Documents-table size from parquet footers only (no job)."""
-    from ..sources.tables import _parquet_scan_width, table_path
-
-    try:
-        return _parquet_scan_width(table_path(sf_dir, "documents"))[0]
-    except Exception:  # pragma: no cover - metadata unreadable
-        return 0
-
-
 #: Standalone per-statistic-family builders (each rebuilds its own tf
 #: plan — arm times attribute families, they don't sum to the entry).
 _CS_ARMS = {
@@ -3012,25 +2982,15 @@ def corpus_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``term_doc_stats`` plan (toptok via ``top_tokens_from_tf``, which
     removes its former second corpus explode); bm25 keeps its own path
     because it prefilters to query-term tokens BEFORE aggregation —
-    strictly cheaper than the full tf table. Static planning cannot
-    share an Exchange across union arms, so the shared plan still
-    re-executes per branch; a ``.persist()`` of tf was MEASURED at
-    sf0.1 and is ~40% SLOWER here (cache write+read overhead exceeds
-    the re-scan cost at this scale, 2.74s vs 1.93s min-of-3) — so the
-    materialization is SCALE-GATED on the input's parquet footer bytes
-    (the ``widen_small_scan`` pattern, r9 verdict #1): above
-    ``_CS_TF_PERSIST_MIN_BYTES`` the shared tf persists serialized
-    DISK_ONLY (one corpus explode feeding all three consumers — at
-    100 TB each avoided re-scan is a full corpus tokenize+shuffle),
-    below it the plan is byte-identical to before. Production can
-    still materialize ``term_doc_stats`` to a table and pass
-    ``tf_table=`` when the stats are reused across jobs."""
+    strictly cheaper than the full tf table. AQE's exchange reuse
+    shares the ``(doc_id, term)`` hash exchange of that plan across
+    the branches (``ReusedExchange`` in the final plan, pinned by
+    tests/test_corpus_stats.py), so the corpus explode runs once at
+    any scale with no persist. Production can still materialize
+    ``term_doc_stats`` to a table and pass ``tf_table=`` when the
+    stats are reused across jobs."""
     d = _t(spark, sf_dir, "documents")
     tf_shared = term_doc_stats(d)
-    if _cs_table_bytes(sf_dir) >= _CS_TF_PERSIST_MIN_BYTES:
-        from pyspark.storagelevel import StorageLevel
-
-        tf_shared = tf_shared.persist(StorageLevel.DISK_ONLY)
 
     # every arm's v is an exact-integer component surface
     # (component_scores=True): no floats reach the driver's

@@ -54,13 +54,6 @@ def get_spark(app_name: str = "impala-hashset-count-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Split small files into >= core-count scan partitions (bounded
-        # below by openCostInBytes, so tiny dims stay 1 partition). This
-        # is what keeps CPU-heavy per-row expression work (shingling,
-        # 64x signature hashing) parallel on a small local parquet file
-        # WITHOUT a round-robin repartition shuffle; at 100 TB the scan
-        # already has thousands of splits and this is a no-op.
-        .config("spark.sql.files.minPartitionNum", str(cores))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -128,8 +121,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # Static 200 is wrong for local mode; AQE coalesces upward-sized
         # partitions at runtime, so matching core count is the right floor.
         ("spark.sql.shuffle.partitions", str(default_parallelism())),
-        # See get_spark: widen small scans without a repartition shuffle.
-        ("spark.sql.files.minPartitionNum", str(default_parallelism())),
         # See get_spark: driver-side plan-build latency. Runtime-settable,
         # but PySpark memoizes the flag on first DataFrame call — reset
         # the module cache below so an externally-created session (the

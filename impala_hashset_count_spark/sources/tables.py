@@ -43,78 +43,48 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Per-core byte cap for the small-scan widening below: a table is only
-#: round-robin repartitioned when its TOTAL bytes are <= cores x this
-#: (default 8 MB/core, env-overridable), i.e. when the whole shuffle
-#: costs less than one ordinary shuffle partition. Above the cap the
-#: scan keeps today's plan byte-for-byte — at 100 TB the condition can
-#: never fire (and a repartition "for parallelism" there would be the
-#: accidental-shuffle anti-pattern the optimization guide warns about).
-WIDEN_MAX_BYTES_PER_CORE = int(
-    os.environ.get("SPARK_GRAFT_WIDEN_BYTES_PER_CORE", str(8 * 1024 * 1024))
-)
+#: Per-core byte cap of ``spread_small``: an input is round-robin
+#: repartitioned only when its estimated size is at most cores x this,
+#: i.e. when the whole shuffle costs less than one ordinary shuffle
+#: partition. Above the cap the plan is left as it is — at 100 TB the
+#: condition never holds, and the scan already has thousands of splits.
+SPREAD_MAX_BYTES_PER_CORE = 8 * 1024 * 1024
 
 
-def _parquet_scan_width(path: str) -> tuple[int, int]:
-    """(total_bytes, total_row_groups) of a parquet file or directory,
-    from footer metadata only. Row groups are Spark's real unit of scan
-    parallelism: a single-row-group file yields ONE non-empty task no
-    matter how many byte-range splits the scheduler cuts."""
-    import pyarrow.parquet as pq
-
-    files: list[str] = []
-    if os.path.isdir(path):
-        for root, _dirs, names in os.walk(path):
-            files.extend(
-                os.path.join(root, n) for n in names if n.endswith(".parquet")
-            )
-    else:
-        files.append(path)
-    total_bytes = 0
-    row_groups = 0
-    for f in files:
-        total_bytes += os.path.getsize(f)
-        row_groups += pq.ParquetFile(f).metadata.num_row_groups
-    return total_bytes, row_groups
-
-
-def widen_small_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Scale-adaptive scan parallelism (optimization guide §2): the
-    bench-SF tables are single-file/single-row-group parquet, so every
-    pre-Exchange stage (tokenize/shingle/signature/partial-agg) of a
-    query ran as ONE task — measured 3.4 s single-core for the 1.5 MB
-    sf0.1 text-analysis pass on a 32-core box. When the footer
-    metadata proves the scan cannot reach core-count parallelism
-    (row_groups < cores) AND the table is small enough that the extra
-    round-robin exchange is trivially cheap (<= WIDEN_MAX_BYTES_PER_CORE
-    per core), repartition to core count so per-row work uses the
-    machine. The decision derives from the INPUT layout, not a local
-    constant: a production table has thousands of row groups, the
-    condition is false, and the plan is unchanged — this is strictly
-    the small-scan-regime fix. Round-robin repartition is
-    deterministic (sortBeforeRepartition, SPARK-23207) and row-order
-    independence of every registered query is already part of the
-    oracle contract (canonicalized compare).
-
-    Applied EXPLICITLY by queries whose per-row CPU dominates their
-    scan (regex/tokenize/shingle passes over ``documents``), never in
-    ``load_table``: the r9 A/B showed blanket widening REGRESSES
-    aggregation-first queries (tpch_q1 0.22->0.61 s, asof
-    0.27->0.74 s) — their map sides exist to SHRINK data before the
-    first exchange, and a round-robin exchange below them ships raw
-    rows instead (the map-side-agg inversion, guide §2.3) — and
-    multi-branch union plans (corpus_stats 2.1->8.2 s), where each
-    branch's differently-pruned scan subtree grew its own exchange."""
-    from ..session import default_parallelism
-
-    cores = default_parallelism()
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``, read driver-side with no job
+    (exact file bytes for a bare scan; an estimate above it). -1 when
+    the session exposes no JVM plan (connect)."""
     try:
-        total_bytes, row_groups = _parquet_scan_width(table_path(sf_dir, name))
-    except Exception:  # pragma: no cover - metadata unreadable
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - non-JVM sessions
+        return -1
+
+
+def spread_small(df: DataFrame) -> DataFrame:
+    """Spread a SMALL input to core count before CPU-heavy per-row work
+    (tokenize/shingle/signature passes).
+
+    The bench-SF parquet files are one row group each, so their scans
+    run as ONE task and no scan-split conf can widen them; one
+    round-robin repartition of the small payload is the only way to
+    use the machine. The gate is ``plan_bytes``: at most
+    ``defaultParallelism x SPREAD_MAX_BYTES_PER_CORE`` spreads, anything
+    larger (or unprobeable) comes back unchanged. Round-robin
+    repartition is deterministic (sortBeforeRepartition, SPARK-23207)
+    and every registered query is row-order independent.
+
+    Applied explicitly by the per-row-CPU-bound passes only, never in
+    ``load_table``: the r9 A/B showed blanket spreading REGRESSES
+    aggregation-first queries (tpch_q1 0.22->0.61 s), whose map side
+    exists to shrink data before the first exchange."""
+    size = plan_bytes(df)
+    if size < 0:
         return df
-    if row_groups >= cores or total_bytes > cores * WIDEN_MAX_BYTES_PER_CORE:
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if size > n * SPREAD_MAX_BYTES_PER_CORE:
         return df
-    return df.repartition(cores)
+    return df.repartition(n)
 
 
 # Per-session memo of loaded tables: ``spark.read.parquet`` pays a
@@ -196,75 +166,6 @@ def write_sink(df: DataFrame, fmt: str, path: str, mode: str = "overwrite", part
     if options:
         writer = writer.options(**options)
     writer.save(path)
-
-
-def z_order_key(df: DataFrame, cols: list[str], bits: int = 10):
-    """64-bit Z-order (Morton) key over ``cols``: each column is
-    uniform-bucketed into 2^bits cells between its min and max (ONE
-    tiny agg pass), then bucket bits are interleaved — bit j of column
-    c lands at position j*len(cols)+c. Built entirely from shift/and/or
-    column expressions (codegen'd, no UDF).
-
-    Returns (key_column, stats_row). len(cols)*bits must be <= 63.
-    Uniform bucketing is the sampling-free choice; heavily skewed
-    columns cluster less evenly (quantile boundaries would fix that at
-    the cost of an approxQuantile pass)."""
-    from pyspark.sql import functions as F
-
-    k = len(cols)
-    if k * bits > 63:
-        raise ValueError(f"{k} cols x {bits} bits exceeds a long key")
-    stats = df.agg(
-        *[F.min(c).alias(f"min_{c}") for c in cols],
-        *[F.max(c).alias(f"max_{c}") for c in cols],
-    ).first()
-    n_cells = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for ci, c in enumerate(cols):
-        lo = float(stats[f"min_{c}"])
-        hi = float(stats[f"max_{c}"])
-        span = (hi - lo) or 1.0
-        bucket = F.least(
-            F.lit(n_cells),
-            ((F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * F.lit(n_cells))
-            .cast("long"),
-        )
-        for b in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(bucket, b).bitwiseAND(F.lit(1)), b * k + ci
-                )
-            )
-    return z, stats
-
-
-def write_z_ordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 10,
-    n_files: int | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Multi-dimensionally clustered write: range-partition + sort on
-    the Z-order key so every output file covers a small HYPER-RECTANGLE
-    of the key space — point/range filters on ANY of ``cols`` prune
-    files via parquet min/max stats. Lexicographic clustering
-    (``write_clustered``) only prunes on the leading column; Z-order is
-    the layout for two-to-four-dimensional pruning at 100 TB.
-    Effectiveness is asserted quantitatively in
-    tests/test_sources.py::test_z_order_write_clusters_all_dims."""
-    z, _ = z_order_key(df, cols, bits)
-    keyed = df.withColumn("__z", z)
-    parts = (
-        keyed.repartitionByRange(n_files, "__z")
-        if n_files
-        else keyed.repartitionByRange("__z")
-    )
-    parts.sortWithinPartitions("__z").drop("__z").write.format(fmt).mode(mode).save(
-        path
-    )
 
 
 def write_clustered(

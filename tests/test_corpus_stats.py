@@ -414,3 +414,24 @@ def test_bigram_logprob_matches_python_model_all_backoff_paths(spark):
     # than doc 2 (backoff), which scores higher than doc 3 (OOV floor)
     per = {i: got[i][1] / got[i][0] for i in (1, 2, 3)}
     assert per[1] > per[2] > per[3]
+
+
+def test_corpus_entry_reuses_term_doc_exchange(spark, sf_small):
+    """The tfidf / toptok / unigram_lp branches of corpus_stats_documents
+    share one ``term_doc_stats`` plan, and AQE's exchange reuse runs its
+    ``(doc_id, term)`` hash exchange once for all of them — which is why
+    the entry needs no persist of the shared frame. Exchange reuse
+    matches plan shapes, so this holds at every scale."""
+    import re
+
+    from impala_hashset_count_spark.plans import all_queries
+
+    df = all_queries()["corpus_stats_documents"].fn(spark, sf_small)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    reused = re.findall(
+        r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(doc_id#\d+L?, term#\d+,",
+        plan,
+    )
+    assert reused, "the (doc_id, term) exchange is no longer reused"

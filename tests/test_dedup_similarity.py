@@ -1202,11 +1202,11 @@ def test_checkpoint_spill_safe_gate_matches_default(spark, sf_small, monkeypatch
     default pair set bit-for-bit, and the default gate must stay OFF at
     bench SFs (plan/behavior byte-identical there)."""
     from impala_hashset_count_spark.operators import dedup as dedup_mod
-    from impala_hashset_count_spark.operators.dedup import _plan_bytes
+    from impala_hashset_count_spark.sources.tables import plan_bytes
 
     d = load_table(spark, sf_small, "documents")
     # bench SFs sit far under the default gate: behavior unchanged there
-    assert 0 < _plan_bytes(d) < dedup_mod._CKPT_DISK_MIN_BYTES
+    assert 0 < plan_bytes(d) < dedup_mod._CKPT_DISK_MIN_BYTES
 
     base = {
         (r.id_1, r.id_2, r.jaccard)

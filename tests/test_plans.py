@@ -132,9 +132,9 @@ def test_text_analysis_single_scan_no_shuffle(spark):
     plan = _plan(spark, "text_analysis_documents")
     # the whole per-document text family is one projection pass: no
     # hash/range shuffle anywhere. The only permissible Exchange is
-    # widen_small_scan's scale-gated ROUND-ROBIN local-parallelism
-    # repartition (r9; absent at production row-group counts), same
-    # convention as test_simhash_signatures_no_groupby_shuffle.
+    # spread_small's size-gated ROUND-ROBIN local-parallelism
+    # repartition (absent above its size cap), same convention as
+    # test_simhash_signatures_no_groupby_shuffle.
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     exchanges = re.findall(r"Exchange \w+", plan)
@@ -150,7 +150,7 @@ def test_simhash_signatures_no_groupby_shuffle(spark):
     plan = explain_str(simhash_signatures(d, "doc_id", "text"))
     # columnar formulation: the signature derives per-row from the token
     # hash array — no explode+groupBy shuffle of the O(total tokens)
-    # stream. The only permissible Exchange is _spread's size-gated
+    # stream. The only permissible Exchange is spread_small's size-gated
     # round-robin local-parallelism repartition (absent at scale).
     assert "hashpartitioning" not in plan
     assert "Generate" not in plan  # no explode anywhere

@@ -202,3 +202,34 @@ def test_newest_floor_file_matches_registry():
         f"{os.path.basename(newest)} arm lines don't match the current "
         f"registry arms — re-record floors"
     )
+
+
+#: The only environment variables the package may read: deployment
+#: settings (core count, data directory, driver heap), not tuning knobs.
+_DEPLOYMENT_ENV = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_DRIVER_MEM"}
+
+
+def test_package_reads_only_deployment_env_vars():
+    """Every ``os.environ`` / ``os.getenv`` read in the package must name
+    one of ``_DEPLOYMENT_ENV`` by a string literal. A size gate or other
+    tuning constant that an env var can override is a knob nothing sets
+    and no test exercises — keep it a constant instead."""
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "impala_hashset_count_spark")
+    read = re.compile(r"\b(?:environ|getenv)\b(?:\.get)?\s*[(\[]?\s*(?:['\"](\w+)['\"])?")
+    bad = []
+    for root, _dirs, files in os.walk(pkg):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                text = fh.read()
+            for m in read.finditer(text):
+                if m.group(1) not in _DEPLOYMENT_ENV:
+                    line = text.count("\n", 0, m.start()) + 1
+                    bad.append(f"{os.path.relpath(path, repo)}:{line} {m.group(0)}")
+    assert not bad, "environment knobs outside the deployment set: " + "; ".join(bad)

@@ -137,10 +137,8 @@ def test_z_order_write_clusters_all_dims(spark, tmp_path):
     extent at ~full range."""
     import pyarrow.parquet as pq
 
-    from impala_hashset_count_spark.sources.tables import (
-        write_clustered,
-        write_z_ordered,
-    )
+    from impala_hashset_count_spark.operators.zorder import cluster_write
+    from impala_hashset_count_spark.sources.tables import write_clustered
 
     # 64x64 uniform integer grid
     grid = spark.range(64 * 64).selectExpr(
@@ -148,7 +146,7 @@ def test_z_order_write_clusters_all_dims(spark, tmp_path):
     )
     zpath = os.path.join(str(tmp_path), "zorder")
     lpath = os.path.join(str(tmp_path), "lex")
-    write_z_ordered(grid, zpath, ["x", "y"], bits=6, n_files=16)
+    cluster_write(grid, ["x", "y"], zpath, n_files=16, bits=6)
     write_clustered(grid, lpath, cluster_by=["x", "y"], n_files=16)
 
     def extents(path, col):
@@ -498,24 +496,18 @@ def test_dynamic_partition_overwrite_replaces_only_touched_partitions(
     )
 
 
-def test_widen_small_scan_fires_only_in_small_scan_regime(
-    spark, sf_small, tmp_path
-):
-    """r9 scan-widening contract: on the single-row-group bench files
-    the helper repartitions to core count with values unchanged; on a
-    many-row-group table (the production layout) it is a NO-OP — the
-    plan must stay byte-identical so the 100 TB path never grows an
+def test_spread_small_fires_only_below_size_cap(spark, sf_small, monkeypatch):
+    """Small-input spreading contract: at or under the size cap the
+    helper repartitions to core count with values unchanged; above it
+    the SAME DataFrame comes back, so a large input never grows an
     accidental shuffle."""
-    from impala_hashset_count_spark.session import default_parallelism
-    from impala_hashset_count_spark.sources.tables import (
-        load_table,
-        widen_small_scan,
-    )
+    from impala_hashset_count_spark.sources import tables
+    from impala_hashset_count_spark.sources.tables import load_table, spread_small
 
-    cores = default_parallelism()
+    cores = spark.sparkContext.defaultParallelism
     base = load_table(spark, sf_small, "documents")
-    wide = widen_small_scan(base, sf_small, "documents")
-    # bench files are single row group -> widening fires
+    wide = spread_small(base)
+    # single-row-group bench file, far under the cap -> spreads
     assert wide.rdd.getNumPartitions() == cores
     assert base.rdd.getNumPartitions() < cores
     # values identical (row order is not part of the contract)
@@ -523,14 +515,10 @@ def test_widen_small_scan_fires_only_in_small_scan_regime(
         map(tuple, base.collect())
     )
 
-    # many-row-group layout -> no-op, SAME plan object semantics
-    many_dir = str(tmp_path / "many")
-    os.makedirs(many_dir)
-    many_path = os.path.join(many_dir, "documents.parquet")
-    import pyarrow.parquet as pq
+    # an in-memory input is probed the same way and spread
+    local = spark.createDataFrame([(i, str(i)) for i in range(10)], "k int, v string")
+    assert spread_small(local).rdd.getNumPartitions() == cores
 
-    tbl = pq.read_table(os.path.join(sf_small, "documents.parquet"))
-    pq.write_table(tbl, many_path, row_group_size=max(1, tbl.num_rows // (cores + 1)))
-    assert pq.ParquetFile(many_path).metadata.num_row_groups >= cores
-    prod = spark.read.parquet(many_path)
-    assert widen_small_scan(prod, many_dir, "documents") is prod
+    # above the cap -> no-op, the same plan object
+    monkeypatch.setattr(tables, "SPREAD_MAX_BYTES_PER_CORE", 1)
+    assert spread_small(base) is base
