@@ -31,12 +31,16 @@ Scale analysis (100 TB, ~10^10 docs):
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.vectors import cosine
+from ..session import fanout
 from ..sources.tables import plan_bytes, spread_small
 
 
@@ -81,8 +85,6 @@ def _eager_checkpoint(
     identical results, no deserialized-block heap cliff at scale."""
     if mode == "local":
         if spill_safe:
-            from pyspark.storagelevel import StorageLevel
-
             return df.localCheckpoint(
                 eager=True, storageLevel=StorageLevel.DISK_ONLY
             )
@@ -497,38 +499,6 @@ def _lsh_band_rows(
     ).select(id_col, "band.band_id", "band.band_hash")
 
 
-def _ckpt_verify_stats(
-    hot_h: DataFrame,
-    sizes: DataFrame,
-    checkpoint_mode: str,
-    spill_safe: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Materialize the two small per-verification statistics frames —
-    the hot-shingle vocabulary (df > cap) and the per-doc set sizes —
-    ONCE each, concurrently.
-
-    Without this, each frame's aggregate subtree is re-embedded per
-    consumer and static planning/AQE do NOT reuse the stages (measured
-    r9: the entry's executed plan carried the ``__df`` aggregate 4x and
-    the sizes aggregate 2x — six full passes over the exploded
-    candidate-shingle stream where two suffice; at 100 TB each pass is
-    a full scan + exchange of that stream). Both frames depend only on
-    the already-checkpointed stream, so the two checkpoint jobs are
-    submitted from a thread pool and overlap (guide §2.6). Both are
-    small by construction: hot_h is bounded by |stream| / cap, sizes is
-    one row per candidate doc."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        hot_f = pool.submit(
-            _eager_checkpoint, hot_h, checkpoint_mode, spill_safe
-        )
-        sizes_f = pool.submit(
-            _eager_checkpoint, sizes, checkpoint_mode, spill_safe
-        )
-        return hot_f.result(), sizes_f.result()
-
-
 def _verified_jaccard_pairs(
     candidates: DataFrame,
     ex: DataFrame,
@@ -545,8 +515,7 @@ def _verified_jaccard_pairs(
     join and the threshold filter. See ``minhash_lsh_pairs`` for the
     full semantics (hot/cold vocabulary split, exactness argument);
     this helper exists so both faces share one implementation and the
-    round-9 single-pass statistics materialization
-    (``_ckpt_verify_stats``)."""
+    round-9 single-pass statistics materialization."""
     hot_h = (
         ex.groupBy("__h")
         .agg(F.count("*").alias("__df"))
@@ -561,7 +530,20 @@ def _verified_jaccard_pairs(
     # join in both formulations), so restricting sizes to candidate
     # docs loses nothing.
     sizes = ex.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    hot_h, sizes = _ckpt_verify_stats(hot_h, sizes, checkpoint_mode, spill_safe)
+    # Materialize the two small statistics frames ONCE each. Without
+    # this, each frame's aggregate subtree is re-embedded per consumer
+    # and static planning/AQE do NOT reuse the stages (measured r9: the
+    # entry's executed plan carried the ``__df`` aggregate 4x and the
+    # sizes aggregate 2x — six full passes over the exploded
+    # candidate-shingle stream where two suffice; at 100 TB each pass
+    # is a full scan + exchange of that stream). Both depend only on
+    # the already-checkpointed stream, so the two checkpoint jobs run
+    # concurrently. Both are small by construction: hot_h is bounded by
+    # |stream| / cap, sizes is one row per candidate doc.
+    hot_h, sizes = fanout(
+        partial(_eager_checkpoint, hot_h, checkpoint_mode, spill_safe),
+        partial(_eager_checkpoint, sizes, checkpoint_mode, spill_safe),
+    )
     ex_cold = ex.join(hot_h, "__h", "left_anti")
     pc_cold = (
         ex_cold.select(F.col(id_col).alias("id_1"), "__h")
@@ -671,12 +653,9 @@ def minhash_lsh_pairs(
     # deserialized heap blocks: identical results, no sf100 heap cliff.
     spill_safe = plan_bytes(df) >= _CKPT_DISK_MIN_BYTES
     docs = doc_shingle_arrays(df, id_col, text_col, n, hash_fn=hash_fn)
-    if spill_safe:
-        from pyspark.storagelevel import StorageLevel
-
-        docs = docs.persist(StorageLevel.DISK_ONLY)
-    else:
-        docs = docs.persist()
+    docs = docs.persist(
+        StorageLevel.DISK_ONLY if spill_safe else StorageLevel.MEMORY_AND_DISK_DESER
+    )
     band_rows = _lsh_band_rows(docs, id_col, k, bands, hash_fn, strategy)
     if max_bucket_docs is not None:
         small = (
@@ -842,12 +821,9 @@ def minhash_lsh_pairs_incremental(
         >= _CKPT_DISK_MIN_BYTES
     )
     new_docs = doc_shingle_arrays(new_df, id_col, text_col, n, hash_fn=hash_fn)
-    if spill_safe:
-        from pyspark.storagelevel import StorageLevel
-
-        new_docs = new_docs.persist(StorageLevel.DISK_ONLY)
-    else:
-        new_docs = new_docs.persist()
+    new_docs = new_docs.persist(
+        StorageLevel.DISK_ONLY if spill_safe else StorageLevel.MEMORY_AND_DISK_DESER
+    )
     new_bands = _lsh_band_rows(new_docs, id_col, k, bands, hash_fn, strategy)
     all_bands = stored_bands.unionByName(new_bands)
     if max_bucket_docs is not None:

@@ -33,12 +33,15 @@ reproducible runs.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot
+from ..session import fanout
 
 
 def brute_force_topk(
@@ -413,15 +416,11 @@ def train_pq(
     marginal geometry of each subspace.
 
     The ``m`` fits are INDEPENDENT seeded models over disjoint vector
-    slices, so they are submitted from a driver thread pool and their
-    (internally serial, iterative) job chains overlap on the cluster
-    (guide §2.6 idle-capacity pattern — a fit's tail tasks leave cores
-    free for the next subspace's jobs). Each codebook is unchanged:
-    seed, input slice, and partitioning are per-subspace, and driver
-    concurrency changes only job interleaving, never a fit's own
-    reduction order."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    slices, so they run through ``fanout`` and their (internally
+    serial, iterative) job chains overlap on the cluster (guide §2.6
+    idle-capacity pattern — a fit's tail tasks leave cores free for the
+    next subspace's jobs). Each codebook is unchanged: seed, input
+    slice, and partitioning are per-subspace."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -440,8 +439,7 @@ def train_pq(
         ).fit(sub)
         return [[float(x) for x in c] for c in model.clusterCenters()]
 
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        return list(pool.map(_fit, range(m)))
+    return fanout(*(partial(_fit, s) for s in range(m)))
 
 
 def pq_encode(

@@ -70,6 +70,7 @@ from ..operators.sampling import (
     temperature_mix,
 )
 from ..operators.similarity import brute_force_topk, ivf_topk, lsh_topk, pq_topk
+from ..session import fanout
 from ..sources.tables import load_table, register_views, spread_small
 from .registry import register
 
@@ -1792,25 +1793,19 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     nul_cos = F.lit(None).cast("double").alias("cos_sim")
     # The label-blocked pairs arm is independent of the k-means
     # training loop (which is inherently serial: seeds then three
-    # dependent centroid-update jobs). Materialize the pairs arm from
-    # a second thread while training runs, so the banding/verify job
-    # back-fills executors the small training collects leave idle
-    # (guide §2.6 — the r9 ANN-tier pattern). The checkpoint holds the
-    # SAME rows the lazy plan produced; training math is untouched.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # dependent centroid-update jobs). Materialize the pairs arm
+    # alongside training, so the banding/verify job back-fills
+    # executors the small training collects leave idle (guide §2.6).
+    # The checkpoint holds the SAME rows the lazy plan produced.
     def _pairs():
         return embedding_near_dup_pairs(
             e, "vec_id", "embedding", threshold=0.4, block_col="label",
             lsh_bands=8, lsh_rows=10,
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        pairs_f = pool.submit(_pairs)
-        km_f = pool.submit(
-            kmeans_quantized, e, "vec_id", "embedding", 8, 3
-        )
-        pairs_ckpt, (assign, cents) = pairs_f.result(), km_f.result()
+    pairs_ckpt, (assign, cents) = fanout(
+        _pairs, lambda: kmeans_quantized(e, "vec_id", "embedding", 8, 3)
+    )
     pairs = pairs_ckpt.select(
         F.lit("pairs").alias("tag"), "id_1", "id_2", nul_n, "cos_sim"
     )
@@ -2110,9 +2105,6 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
 
-    # Independent tier plans build concurrently (r9; py4j releases the
-    # GIL on its socket waits — the corpus_stats_documents pattern).
-    # Tier expressions, union order, and results are unchanged.
     def _b_exact():
         return brute_force_topk(e, q, "vec_id", "embedding", k=10).select(
             F.lit("exact").alias("tier"), "query_id", "neighbor_id", "cos_sim", "rank"
@@ -2123,12 +2115,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("lsh").alias("tier"), "query_id", "neighbor_id", "cos_sim", "rank"
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        exact, lsh = (
-            f.result() for f in [pool.submit(_b_exact), pool.submit(_b_lsh)]
-        )
+    exact, lsh = fanout(_b_exact, _b_lsh)
     return exact.unionByName(lsh)
 
 
@@ -2185,21 +2172,13 @@ def similarity_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 5)
     # The three tier builds are independent, and two of them run real
     # training jobs at build time (ivf: one k-means fit; pq: m=8
-    # subspace fits, themselves overlapped inside train_pq) — submit
-    # them from a thread pool so the fits' job chains overlap
-    # (guide §2.6; same pattern as similarity_topk_bruteforce's
-    # branch builds). Tier expressions and results are unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        lsh_f = pool.submit(
-            lsh_topk, e, q, "vec_id", "embedding", k=10, dim=64
-        )
-        ivf_f = pool.submit(
-            ivf_topk, e, q, "vec_id", "embedding", k=10, n_cells=16, nprobe=4
-        )
-        pq_f = pool.submit(pq_topk, e, q, "vec_id", "embedding", dim=64, k=10)
-        lsh, ivf, pq = lsh_f.result(), ivf_f.result(), pq_f.result()
+    # subspace fits, themselves fanned out inside train_pq), so the
+    # fits' job chains overlap (guide §2.6).
+    lsh, ivf, pq = fanout(
+        lambda: lsh_topk(e, q, "vec_id", "embedding", k=10, dim=64),
+        lambda: ivf_topk(e, q, "vec_id", "embedding", k=10, n_cells=16, nprobe=4),
+        lambda: pq_topk(e, q, "vec_id", "embedding", dim=64, k=10),
+    )
     ann = (
         lsh.withColumn("tier", F.lit("lsh"))
         .unionByName(ivf.withColumn("tier", F.lit("ivf")))
@@ -2390,18 +2369,13 @@ def dedup_transitive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # The two component algorithms are EAGER iterative loops (per-round
     # checkpoints + fixpoint actions) over the same checkpointed pair
-    # table, with no dependency on each other — run them from a thread
-    # pool so the star rounds back-fill executors idled by the
-    # propagation loop's fixpoint counts and vice versa (guide §2.6;
-    # the r9 corpus_stats/auto-router pattern applied to iterative
-    # jobs). Iteration order, labels, and results are unchanged — only
-    # the two loops' wall-clocks overlap.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        comp_f = pool.submit(near_dup_components, pairs)
-        ccstar_f = pool.submit(near_dup_components_star, pairs)
-        comp_labels, ccstar_labels = comp_f.result(), ccstar_f.result()
+    # table, with no dependency on each other — fanned out so the star
+    # rounds back-fill executors idled by the propagation loop's
+    # fixpoint counts and vice versa (guide §2.6).
+    comp_labels, ccstar_labels = fanout(
+        lambda: near_dup_components(pairs),
+        lambda: near_dup_components_star(pairs),
+    )
     comp = comp_labels.select(
         F.lit("comp").alias("tag"),
         "id",
@@ -3112,24 +3086,16 @@ def corpus_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # Build the seven independent branch PLANS from a thread pool
-    # (optimization guide §2.6 applied to the DRIVER): plan
+    # Build the seven independent branch PLANS concurrently: plan
     # construction here is py4j-socket-wait-bound (~2,570 round trips,
-    # ~1.3 s serial — profiled r9: 70% of wall sits in recv_into), and
-    # py4j releases the GIL on every wait, so independent branch
-    # builds overlap almost perfectly. Expressions, branch order in
-    # the union, and results are unchanged — only the construction of
-    # the seven subtrees is concurrent. Measured r9 at sf0.1: entry
-    # plan-build 1.29 -> 0.37 s min-of-3 (bench_build_split), entry
-    # total 3.1 -> 2.3 s; results bit-identical (md5 over canonicalized
-    # rows at sf0.001/sf0.01).
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = (_b_tfidf, _b_bm, _b_tt, _b_ulp, _b_tsk, _b_blp, _b_qm)
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        tfidf, bm, tt, ulp, tsk, blp, qm = (
-            f.result() for f in [pool.submit(b) for b in builders]
-        )
+    # ~1.3 s serial — profiled r9: 70% of wall sits in recv_into), so
+    # the branch builds overlap almost perfectly. Measured r9 at sf0.1:
+    # entry plan-build 1.29 -> 0.37 s min-of-3 (bench_build_split),
+    # entry total 3.1 -> 2.3 s; results bit-identical (md5 over
+    # canonicalized rows at sf0.001/sf0.01).
+    tfidf, bm, tt, ulp, tsk, blp, qm = fanout(
+        _b_tfidf, _b_bm, _b_tt, _b_ulp, _b_tsk, _b_blp, _b_qm
+    )
     return (
         tfidf.unionByName(bm)
         .unionByName(tt)

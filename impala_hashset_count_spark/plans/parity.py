@@ -59,6 +59,7 @@ from ..operators.hashset_count import (
     register_sql_udaf,
 )
 from ..functions.vectors import jl_sign_matrix, sign_project
+from ..session import fanout
 from ..sources.tables import load_table, register_views
 from .registry import register
 
@@ -487,24 +488,19 @@ def _hct_auto_routed(li, ev, d, st_li, st_ev, st_d) -> DataFrame:
 def _hct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Routes from ONE deterministic stats job per input. The three
     # stats prerequisites are INDEPENDENT one-row jobs on three
-    # different tables; submitting them from a small thread pool
-    # overlaps them (optimization guide §2.6) instead of paying three
-    # serial driver round-trips — each RouteStats value (and hence each
-    # routing decision and the driver hash) is unchanged. A
+    # different tables, run through ``fanout`` so they overlap. A
     # single-action variant (union the three one-row aggregates,
     # collect once) is ~8% slower than the three overlapped jobs: the
     # union plan's stage waves wait for all three subtrees where
     # independent jobs finish alone.
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.auto_route import auto_route_stats
 
     li, ev, d = _hct_auto_inputs(spark, sf_dir)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        st_li = pool.submit(auto_route_stats, li, ["l_linestatus"], "l_partkey")
-        st_ev = pool.submit(auto_route_stats, ev, ["event_type"], "uid")
-        st_d = pool.submit(auto_route_stats, d, ["lang"], "text")
-        stats = st_li.result(), st_ev.result(), st_d.result()
+    stats = fanout(
+        lambda: auto_route_stats(li, ["l_linestatus"], "l_partkey"),
+        lambda: auto_route_stats(ev, ["event_type"], "uid"),
+        lambda: auto_route_stats(d, ["lang"], "text"),
+    )
     return _hct_auto_routed(li, ev, d, *stats)
 
 
@@ -2120,21 +2116,11 @@ def join_range_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
       window, paired when the windows overlap, counted by the right
       side's priority. Again the oracle runs the naive non-equi
       overlap join, so the hash certifies the rewrite."""
-    # Independent branch plans build concurrently (r9; py4j releases
-    # the GIL on its socket waits, so construction overlaps — the
-    # corpus_stats_documents pattern). Branch expressions, union
-    # order, and results are unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        resid, binned, overlap = (
-            f.result()
-            for f in [
-                pool.submit(_range_resid, spark, sf_dir),
-                pool.submit(_range_binned, spark, sf_dir),
-                pool.submit(_range_overlap, spark, sf_dir),
-            ]
-        )
+    resid, binned, overlap = fanout(
+        lambda: _range_resid(spark, sf_dir),
+        lambda: _range_binned(spark, sf_dir),
+        lambda: _range_overlap(spark, sf_dir),
+    )
     return resid.union(binned).union(overlap)
 
 

@@ -17,6 +17,7 @@ from ..operators.multimodal import (
     resize_images,
     wav_roundtrip_features,
 )
+from ..session import fanout
 from ..sources.tables import load_table
 from .registry import register
 
@@ -303,21 +304,7 @@ def streaming_state_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hashset_count",
         )
 
-    # Independent branch plans build concurrently (r9; py4j releases
-    # the GIL on its socket waits — the corpus_stats_documents
-    # pattern). Branch expressions, union order, and results are
-    # unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        sess, ded, dist = (
-            f.result()
-            for f in [
-                pool.submit(_b_sess),
-                pool.submit(_b_ded),
-                pool.submit(_b_dist),
-            ]
-        )
+    sess, ded, dist = fanout(_b_sess, _b_ded, _b_dist)
     # the streaming frequent-items sketch's batch twin — the SAME
     # operator code (groupBy + sketch agg + in-array ranking is
     # engine-agnostic) run on the batch table, hash-mirrored by the

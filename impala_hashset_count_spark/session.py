@@ -17,8 +17,11 @@ from __future__ import annotations
 
 import os
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def default_parallelism() -> int:
@@ -26,6 +29,28 @@ def default_parallelism() -> int:
     if cpus and cpus.isdigit():
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def fanout(*thunks: Callable[[], Any]) -> list:
+    """Run independent zero-argument builds concurrently, one driver
+    thread each, and return their results in argument order.
+
+    py4j releases the GIL on its socket waits, so independent plan
+    builds and the eager jobs they submit (checkpoints, stats probes,
+    model fits) overlap instead of queueing behind one another's driver
+    round trips. Driver concurrency changes only job interleaving:
+    every thunk builds the same plan and returns the same result as it
+    would serially.
+
+    Each thunk is wrapped with ``inheritable_thread_target`` here, in
+    the calling thread, so it runs on its own copy of the caller's
+    local properties: every job it submits carries the caller's job
+    group and description, and nested fan-outs pass them on. An
+    exception raised in a thunk reaches the caller."""
+    session = SparkSession.active()
+    wrapped = [inheritable_thread_target(session)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(wrapped)) as pool:
+        return list(pool.map(lambda f: f(), wrapped))
 
 
 def get_spark(app_name: str = "impala-hashset-count-spark") -> SparkSession:

@@ -395,3 +395,48 @@ def test_drift_totals_join_is_broadcast_and_single_scan_per_slice(spark, sf_smal
     for line in plan.splitlines():
         if "Exchange" in line and "text" in line:
             raise AssertionError(f"text column shuffled: {line}")
+
+
+def test_fanout_keeps_argument_order_and_raises(spark):
+    """``fanout`` returns results in argument order even when later
+    thunks finish first, and a thunk's exception reaches the caller."""
+    import time
+
+    import pytest
+
+    from impala_hashset_count_spark.session import fanout
+
+    def after(delay, value):
+        def thunk():
+            time.sleep(delay)
+            return value
+
+        return thunk
+
+    assert fanout(after(0.3, "a"), after(0.1, "b"), after(0.0, "c")) == ["a", "b", "c"]
+
+    def boom():
+        raise ValueError("thunk failed")
+
+    with pytest.raises(ValueError, match="thunk failed"):
+        fanout(after(0.1, "a"), boom)
+
+
+def test_build_jobs_carry_callers_job_group(spark):
+    """Every job an entry runs while its plan is built — including the
+    jobs submitted from ``fanout`` threads — carries the caller's job
+    group, so per-entry job accounting sees all of them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("build-under-group", "build-under-group")
+    try:
+        all_queries()["dedup_minhash_lsh"].fn(spark, SF)
+        all_queries()["hashset_count_tiers"].arms["auto"](spark, SF)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    labelled = set(tracker.getJobIdsForGroup("build-under-group"))
+    unlabelled = set(tracker.getJobIdsForGroup(None)) - before
+    assert labelled, "the builds ran no job, so the test checks nothing"
+    assert not unlabelled, f"build jobs without the caller's job group: {sorted(unlabelled)}"

@@ -233,3 +233,27 @@ def test_package_reads_only_deployment_env_vars():
                     line = text.count("\n", 0, m.start()) + 1
                     bad.append(f"{os.path.relpath(path, repo)}:{line} {m.group(0)}")
     assert not bad, "environment knobs outside the deployment set: " + "; ".join(bad)
+
+
+def test_driver_threads_only_through_fanout():
+    """Only ``session.py`` may name ``ThreadPoolExecutor`` or
+    ``threading``: every other driver-side concurrency goes through
+    ``session.fanout``, which hands each thread the caller's job group.
+    A pool of its own would submit jobs no per-entry accounting sees."""
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "impala_hashset_count_spark")
+    pool = re.compile(r"\b(?:ThreadPoolExecutor|threading)\b")
+    bad = []
+    for root, _dirs, files in os.walk(pkg):
+        for fname in files:
+            path = os.path.join(root, fname)
+            if not fname.endswith(".py") or path == os.path.join(pkg, "session.py"):
+                continue
+            with open(path) as fh:
+                for lineno, line in enumerate(fh, 1):
+                    if pool.search(line):
+                        bad.append(f"{os.path.relpath(path, repo)}:{lineno}")
+    assert not bad, "driver thread pools outside session.fanout: " + "; ".join(bad)
