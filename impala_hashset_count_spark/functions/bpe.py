@@ -40,7 +40,6 @@ replacement ``<a><b>`` -> ``<ab>``, which is
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -226,53 +225,3 @@ def learn_bpe(
     )
     counts = {r["w"]: r["count"] for r in wc.collect()}
     return learn_bpe_from_counts(counts, n_merges, min_freq)
-
-
-def bpe_encode_arrow(
-    col: str | Column, merges: list[tuple[str, str]] | None = None
-) -> Column:
-    """Arrow-batched twin of ``bpe_encode_expr``: the identical wrap
-    encoding + literal replace chain executed as CPython C-level
-    ``str.replace`` per batch instead of 48 Catalyst replace nodes.
-    Python's ``str.replace`` is the same left-to-right non-overlapping
-    literal replacement as Spark's ``replace`` and DuckDB's
-    ``REPLACE``, so the output is BYTE-IDENTICAL to the JVM tier (and
-    to the SQL mirror) — asserted in tests. When projected alongside
-    other pandas UDFs over the same column (text_analysis stages it
-    next to the winnowing UDF), Spark evaluates them in ONE
-    ArrowEvalPython node, so the text column crosses to Python once.
-
-    MEASURED slower than the JVM tier at sf0.1 and kept as a knob, not
-    the default: standalone 1.55s vs 0.97s (pays its own Arrow
-    transfer), and even fused into text_analysis' existing single
-    ArrowEvalPython node 3.02s vs 2.60s for the whole query — the
-    Python worker is already saturated by the winnowing sweep, while
-    the 48 JVM replaces run inside the codegen stage in parallel. The
-    knob exists for corpora where Python-side batching wins (very long
-    documents amortize the per-row overhead)."""
-    import re as _re
-
-    merges_ = DEFAULT_MERGES if merges is None else merges
-    pairs = [(f"<{a}><{b}>", f"<{a}{b}>") for a, b in merges_]
-    word_re = _re.compile("[a-z]+")
-    char_re = _re.compile("([a-z])")
-
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def _enc(s: pd.Series) -> pd.Series:
-        out = []
-        for text in s:
-            if text is None:
-                out.append(None)
-                continue
-            enc = char_re.sub(
-                r"<\1>", "|".join(word_re.findall(text.lower()))
-            )
-            for pat, rep in pairs:
-                enc = enc.replace(pat, rep)
-            out.append(enc)
-        return pd.Series(out)
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _enc(c)

@@ -190,50 +190,11 @@ def fingerprint_md5(col: str | Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def rolling_hashes(col: str | Column, window: int = 8) -> Column:
-    """Rolling (windowed) hashes over character windows — the winnowing
-    building block for local fingerprinting. Returns array<bigint> of
-    xxhash64 over each ``window``-char substring. Spark-side only (no
-    SQL oracle: xxhash64 seeds are engine-specific)."""
-    return F.transform(char_shingles(col, window), lambda s: F.xxhash64(s))
-
-
-def winnowing_fingerprint(
-    col: str | Column,
-    window: int = 8,
-    stride: int = 4,
-    hashes: Column | None = None,
-) -> Column:
-    """Winnowing-style local fingerprint: min rolling hash per stride
-    block (a compact array signature robust to small edits). Inputs
-    shorter than ``window`` yield an EMPTY array (descending-sequence
-    guard: sequence(0, -1) is [0, -1], which would emit null blocks).
-
-    ``hashes``: optionally pass a pre-materialized
-    ``rolling_hashes(col, window)`` column. The hash array is referenced
-    once per block by the outer transform's lambda; if it is an inline
-    expression rather than an attribute, every block recomputes the
-    ENTIRE rolling-hash array — O(chars x blocks) per row instead of
-    O(chars), measured as a 40x slowdown on the text-analysis pass."""
-    if hashes is None:
-        hashes = rolling_hashes(col, window)
-    n_blocks = F.ceil(F.size(hashes) / F.lit(stride)).cast("int")
-    blocks = F.when(
-        n_blocks > 0, F.sequence(F.lit(0), n_blocks - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        blocks,
-        lambda b: F.array_min(F.slice(hashes, b * stride + 1, stride)),
-    )
-
-
 # Polynomial (Karp-Rabin) winnowing parameters — frozen, mirrored in
 # oracle SQL. The rolling hash is h = fold(h * BASE + codepoint) mod
 # MOD over each window: every intermediate stays below 2^38, so the
 # arithmetic is exact int64 in numpy, BIGINT in Spark/DuckDB, and a
 # plain int in Python — four independent engines, identical values.
-# (xxhash64-based rolling_hashes/winnowing_fingerprint above remain the
-# pure-JVM tier; their hash values are Spark-specific.)
 POLY_BASE = 131
 POLY_MOD = (1 << 31) - 1
 

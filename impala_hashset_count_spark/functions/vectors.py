@@ -55,8 +55,8 @@ def l2_normalize(a: str | Column) -> Column:
     Shaped as ONE ``aggregate`` whose finish lambda receives the squared
     norm as a lambda VARIABLE: placing ``l2_norm(a)`` inline inside the
     per-element transform would re-reduce the whole vector per element —
-    O(d^2) per row (the HOF-inlining hazard documented at
-    ``text.winnowing_fingerprint``)."""
+    O(d^2) per row (a lambda re-evaluates an inline subexpression on
+    every call)."""
     v = _c(a)
     return F.aggregate(
         v,

@@ -1,31 +1,18 @@
 """As-of (backward) join — host-surface extension operator.
 
-Spark has no native ASOF JOIN (DuckDB does). Three strategies, picked
-by the data shape:
-
-- ``strategy="union"`` (the scale default): tag both sides, UNION
-  them, sort each key's rows by (ts, side, order) inside ONE window
-  shuffle, and carry the latest right payload forward with
-  ``last(..., ignorenulls=True)``. This is the classic sort-merge
-  as-of: O(left + right) rows, **no fan-out**, no Python — the only
-  formulation that is simultaneously declarative AND safe when a key
-  has unboundedly many right rows. Skew caveat (shared with every
-  per-key window): one pathological key sorts in one task; shard such
-  a key by coarse time range and carry each shard's last right row
-  into the next if that ever binds.
-- ``strategy="window"``: equi-join on the key plus the range predicate,
-  then keep the latest right row per left row via ``row_number``. Fully
-  declarative -> Catalyst can broadcast the right side, push filters,
-  and AQE-split skew. Cost is the intermediate fan-out (left x matching
-  right rows per key); right choice when right-rows-per-key is bounded
-  AND the right side is broadcastable (the fan-out then never shuffles).
-- ``strategy="pandas"``: co-partition both sides by key and run
-  ``pandas.merge_asof`` per group via ``applyInPandas`` (cogroup).
-  One shuffle per side, no fan-out, but pays the Arrow/Python hop —
-  kept as the structural twin of the pandas ecosystem's merge_asof.
+Spark has no native ASOF JOIN (DuckDB does). This is the sort-merge
+as-of: tag both sides, UNION them, sort each key's rows by (ts, side,
+order) inside ONE window shuffle, and carry the latest right payload
+forward with ``last(..., ignorenulls=True)``. O(left + right) rows,
+**no fan-out**, no Python — declarative AND safe when a key has
+unboundedly many right rows. Skew caveat (shared with every per-key
+window): one pathological key sorts in one task; shard such a key by
+coarse time range and carry each shard's last right row into the next
+if that ever binds.
 
 Ties on the right timestamp are broken by the largest ``right_order``
-column (deterministic in all strategies).
+column. Left rows with no right row at or before them are dropped
+(inner semantics).
 """
 
 from __future__ import annotations
@@ -43,20 +30,9 @@ def asof_join(
     right_ts: str,
     right_cols: list[str],
     right_order: str,
-    strategy: str = "window",
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
     ``right_ts`` <= ``left_ts`` for the same key (backward as-of)."""
-    if strategy == "window":
-        return _asof_window(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order)
-    if strategy == "pandas":
-        return _asof_pandas(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order)
-    if strategy == "union":
-        return _asof_union(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order)
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-def _asof_union(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order):
     clash = {c for c in right_cols if c != right_key} & set(left.columns)
     if clash:
         raise ValueError(
@@ -68,7 +44,7 @@ def _asof_union(left, right, left_key, right_key, left_ts, right_ts, right_cols,
     # side 0 sorts right rows BEFORE left rows on an equal timestamp,
     # which is exactly the `right_ts <= left_ts` (inclusive) contract;
     # among equal-ts right rows the ascending right_order sort makes
-    # last() pick the LARGEST order — the shared tie rule.
+    # last() pick the LARGEST order — the module's tie rule.
     r = right.select(
         F.col(right_key).alias("__k"),
         F.col(right_ts).cast(ts_type).alias("__t"),
@@ -99,78 +75,4 @@ def _asof_union(left, right, left_key, right_key, left_ts, right_ts, right_cols,
             *left.columns,
             *[F.col("__m")[c].alias(c) for c in keep_right],
         )
-    )
-
-
-def _asof_window(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order):
-    # The key is aliased internally so left_key == right_key works (it
-    # is dropped from the output anyway); the payload/timestamp columns
-    # keep their names in the output, so THOSE must not collide.
-    clash = {c for c in right_cols if c != right_key} & set(left.columns)
-    if clash:
-        raise ValueError(
-            f"right_cols {sorted(clash)} collide with left columns; "
-            "rename them on the right side before the as-of join"
-        )
-    rkey = "__asof_rkey"
-    r = right.select(
-        F.col(right_key).alias(rkey),
-        right_ts,
-        *[c for c in right_cols if c not in (right_key, right_ts)],
-    )
-    # Synthetic per-row id as the window partition key: partitioning by
-    # *left.columns silently COLLAPSED fully-duplicate left rows into
-    # one output row (the pandas strategy keeps both), and a single long
-    # key is also a narrower sort key than the whole row. The id is
-    # plan-internal (values vary run to run, the grouping they induce
-    # does not) and is dropped before returning.
-    l = left.withColumn("__lid", F.monotonically_increasing_id())
-    joined = l.join(
-        r,
-        (F.col(left_key) == F.col(rkey)) & (F.col(right_ts) <= F.col(left_ts)),
-        "inner",
-    )
-    w = Window.partitionBy("__lid").orderBy(
-        F.col(right_ts).desc(), F.col(right_order).desc()
-    )
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__lid", rkey)
-    )
-
-
-def _asof_pandas(left, right, left_key, right_key, left_ts, right_ts, right_cols, right_order):
-    import pandas as pd
-
-    out_fields = [left.schema[c] for c in left.columns] + [
-        right.schema[c] for c in right_cols if c not in (right_key,)
-    ]
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(out_fields)
-    keep_right = [c for c in right_cols if c != right_key]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        # Sort right by (ts, order): merge_asof keeps the LAST match, so
-        # ties on ts resolve to the largest right_order — same rule as
-        # the window strategy.
-        rpdf = rpdf.sort_values([right_ts, right_order], kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[[right_ts] + [c for c in keep_right if c != right_ts]],
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-        )
-        merged = merged.dropna(subset=[right_ts])
-        return merged[[f.name for f in out_fields]]
-
-    return (
-        left.groupBy(left_key)
-        .cogroup(right.groupBy(right_key))
-        .applyInPandas(merge, schema=out_schema)
     )

@@ -52,8 +52,8 @@ def _shingles_from_tokens(toks: Column, n: int) -> Column:
     functions.text.word_shingles). ``toks`` must be an ATTRIBUTE (a
     materialized column), not an inline expression: it is referenced
     inside the per-shingle lambda, and an inline normalize+split there
-    would be re-evaluated per shingle — O(tokens x chars) per row (the
-    HOF-inlining hazard documented at text.winnowing_fingerprint)."""
+    would be re-evaluated per shingle — O(tokens x chars) per row
+    (Catalyst inlines a non-attribute into every lambda reference)."""
     starts = F.when(
         F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))

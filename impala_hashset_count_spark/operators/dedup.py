@@ -33,8 +33,6 @@ from __future__ import annotations
 
 from functools import partial
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -356,82 +354,6 @@ def doc_shingle_arrays(
     return toks.select(F.col(id_col), F.expr(expr).alias("shs"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    k: int = 64,
-    strategy: str = "hof",
-) -> DataFrame:
-    """k-permutation MinHash signature per doc: h_i(doc) = min over
-    shingles of xxhash64(i, shingle). Derived COLUMNAR from the per-doc
-    shingle array — zero additional shuffles beyond the one that built
-    the array. The k derived hashes mix a fixed-width long, not the
-    shingle string.
-
-    ``strategy``: ``'hof'`` (default) computes the k permutation mins
-    as JVM ``transform``+``array_min`` folds; ``'arrow'`` runs them as
-    vectorized numpy XXH64 sweeps per Arrow batch (functions/xxh64.py
-    matches Spark's xxhash64 bit-for-bit) with per-doc mins via one
-    ``minimum.reduceat``. Bit-identical by construction (asserted in
-    tests/test_dedup_similarity.py). MEASURED at sf0.1 (~95 shingles
-    per doc): hof 0.33s ~= the shingle pass itself, arrow 0.47s — the
-    Arrow transfer of the shingle arrays costs more than the fold
-    saves, so hof is the default; the arrow tier is the escape hatch
-    for long-document corpora where shingles-per-doc (and so the
-    k-fold CPU) is 10-100x higher while transfer stays linear."""
-    if strategy not in ("arrow", "hof"):
-        raise ValueError(f"strategy must be 'arrow' or 'hof', got {strategy!r}")
-    docs = doc_shingle_arrays(df, id_col, text_col, n)
-    if strategy == "arrow":
-        return docs.select(F.col(id_col), _minhash_sig_arrow(k)(F.col("shs")).alias("sig"))
-    return docs.select(F.col(id_col), _sig_expr(k).alias("sig"))
-
-
-def _minhash_sig_arrow(k: int):
-    """Arrow tier of the k-permutation signature: one numpy XXH64
-    sweep per permutation over the batch's concatenated shingle ids,
-    per-doc mins via ``minimum.reduceat`` (SIGNED int64 comparison,
-    matching Spark's LONG ``array_min``). Empty shingle sets yield
-    [NULL]*k exactly like ``array_min`` over an empty transform."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    from ..functions.xxh64 import SPARK_SEED, xxh64_int, xxh64_long
-
-    seeds = [np.uint64(xxh64_int(i, SPARK_SEED)) for i in range(k)]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sig(shs: pd.Series) -> pd.Series:
-        arrs = shs.to_numpy()
-        nonempty = [a for a in arrs if a is not None and len(a)]
-        out = []
-        with np.errstate(over="ignore"):
-            if nonempty:
-                x = np.concatenate(
-                    [np.asarray(a, dtype=np.int64) for a in nonempty]
-                ).view(np.uint64)
-                lens = np.array([len(a) for a in nonempty])
-                starts = np.zeros(len(nonempty), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                mins = np.empty((len(nonempty), k), dtype=np.int64)
-                for i in range(k):
-                    h = xxh64_long(x, seeds[i]).view(np.int64)
-                    mins[:, i] = np.minimum.reduceat(h, starts)
-            idx = 0
-            for a in arrs:
-                if a is None:
-                    out.append(None)
-                elif len(a) == 0:
-                    out.append([None] * k)
-                else:
-                    out.append(mins[idx].tolist())
-                    idx += 1
-        return pd.Series(out)
-
-    return _sig
-
-
 def _sig_expr(k: int, hash_fn: str = "xxhash64"):
     # SQL-text lambdas, NOT Python lambdas: PySpark canonicalizes the
     # lambda variables of Python-callable HOFs such that k transforms
@@ -460,20 +382,11 @@ def _lsh_band_rows(
     k: int,
     bands: int,
     hash_fn: str,
-    strategy: str,
 ) -> DataFrame:
     """(id, band_id, band_hash) rows from per-doc shingle arrays — the
-    shared banding step of the batch and incremental LSH faces.
-    strategy applies to the xxhash64 production tier only: 'arrow'
-    runs the k permutation mins as numpy XXH64 sweeps, bit-identical
-    to the default 'hof' Catalyst fold (see minhash_signatures for
-    the measurement that picked the default); the md5 oracle tier
-    always uses the HOF form its SQL mirror replicates term-for-term."""
+    shared banding step of the batch and incremental LSH faces."""
     rows = k // bands
-    if hash_fn == "xxhash64" and strategy == "arrow":
-        sig = docs.select(F.col(id_col), _minhash_sig_arrow(k)(F.col("shs")).alias("sig"))
-    else:
-        sig = docs.select(F.col(id_col), _sig_expr(k, hash_fn=hash_fn).alias("sig"))
+    sig = docs.select(F.col(id_col), _sig_expr(k, hash_fn=hash_fn).alias("sig"))
 
     def band_val(b: int):
         sl = F.slice("sig", b * rows + 1, rows)
@@ -590,7 +503,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_bucket_docs: int | None = None,
     hash_fn: str = "xxhash64",
-    strategy: str = "hof",
     hot_shingle_docs: int = 256,
     checkpoint_mode: str = "local",
 ) -> DataFrame:
@@ -646,8 +558,6 @@ def minhash_lsh_pairs(
     path, survives executor loss — the long-job 100 TB posture). Both
     modes produce identical results (equality-tested); see
     ``_eager_checkpoint``."""
-    if strategy not in ("arrow", "hof"):
-        raise ValueError(f"strategy must be 'arrow' or 'hof', got {strategy!r}")
     # Above the gate (large inputs only — see _CKPT_DISK_MIN_BYTES) the
     # reused intermediates store serialized on disk instead of as
     # deserialized heap blocks: identical results, no sf100 heap cliff.
@@ -656,7 +566,7 @@ def minhash_lsh_pairs(
     docs = docs.persist(
         StorageLevel.DISK_ONLY if spill_safe else StorageLevel.MEMORY_AND_DISK_DESER
     )
-    band_rows = _lsh_band_rows(docs, id_col, k, bands, hash_fn, strategy)
+    band_rows = _lsh_band_rows(docs, id_col, k, bands, hash_fn)
     if max_bucket_docs is not None:
         small = (
             band_rows.groupBy("band_id", "band_hash")
@@ -748,7 +658,6 @@ def minhash_lsh_index(
     k: int = 64,
     bands: int = 32,
     hash_fn: str = "xxhash64",
-    strategy: str = "hof",
 ) -> tuple[DataFrame, DataFrame]:
     """The STORED artifacts of a MinHash-LSH index over a corpus:
     ``(docs, bands)`` where docs = (id, shs: array<long>) per-doc
@@ -757,7 +666,7 @@ def minhash_lsh_index(
     continuously-ingesting corpus never re-hashes history — see
     ``minhash_lsh_pairs_incremental``."""
     docs = doc_shingle_arrays(df, id_col, text_col, n, hash_fn=hash_fn)
-    return docs, _lsh_band_rows(docs, id_col, k, bands, hash_fn, strategy)
+    return docs, _lsh_band_rows(docs, id_col, k, bands, hash_fn)
 
 
 def minhash_lsh_pairs_incremental(
@@ -772,7 +681,6 @@ def minhash_lsh_pairs_incremental(
     threshold: float = 0.5,
     max_bucket_docs: int | None = None,
     hash_fn: str = "xxhash64",
-    strategy: str = "hof",
     hot_shingle_docs: int = 256,
     checkpoint_mode: str = "local",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -824,7 +732,7 @@ def minhash_lsh_pairs_incremental(
     new_docs = new_docs.persist(
         StorageLevel.DISK_ONLY if spill_safe else StorageLevel.MEMORY_AND_DISK_DESER
     )
-    new_bands = _lsh_band_rows(new_docs, id_col, k, bands, hash_fn, strategy)
+    new_bands = _lsh_band_rows(new_docs, id_col, k, bands, hash_fn)
     all_bands = stored_bands.unionByName(new_bands)
     if max_bucket_docs is not None:
         small = (

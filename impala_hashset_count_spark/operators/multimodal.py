@@ -124,53 +124,6 @@ def extract_image_metadata(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
 
 
-def extract_image_metadata_arrow(df: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of ``extract_image_metadata``: consumes raw
-    pyarrow RecordBatches — the payload LENGTHS come straight from the
-    Arrow binary array's offsets (``pc.binary_length``), so the media
-    bytes are never materialized as per-row Python ``bytes`` objects
-    the way a pandas Series requires. For metadata-only passes over a
-    petabyte binary column that is the right face: the only thing
-    crossing into numpy is one int per row. Output is bit-identical to
-    the mapInPandas face (asserted in tests); real decoders that must
-    touch payload bytes keep the pandas face."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("byte_len", pa.int32()),
-            ("width", pa.int32()),
-            ("height", pa.int32()),
-            ("channels", pa.int32()),
-            ("n_frames", pa.int32()),
-        ]
-    )
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in it:
-            n = (
-                pc.binary_length(rb.column(rb.schema.get_field_index("payload")))
-                .cast(pa.int64())
-                .to_numpy(zero_copy_only=False)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")).cast(pa.int64()),
-                    pa.array(n.astype("int32")),
-                    pa.array((64 + n % 576).astype("int32")),
-                    pa.array((64 + (n // 7) % 448).astype("int32")),
-                    pa.array(np.full(len(n), 3, dtype="int32")),
-                    pa.array((1 + n % 8).astype("int32")),
-                ],
-                schema=out_schema,
-            )
-
-    return df.mapInArrow(batches, schema=IMAGE_META_SCHEMA)
-
-
 #: Output schema of the (fake or real) audio decode step.
 AUDIO_META_SCHEMA = (
     "doc_id bigint, byte_len int, sample_rate int, n_channels int, "

@@ -133,8 +133,7 @@ def _signature_bands(df: DataFrame, vec_col: str, planes, bands: int, rows: int)
     )
     # Stage the dot array as an ATTRIBUTE before the 32 bit tests
     # reference it — an inline expression would be re-evaluated per
-    # reference (the HOF-inlining hazard documented at
-    # text.winnowing_fingerprint).
+    # reference (Catalyst does not share a repeated non-attribute).
     staged = df.withColumn("__dots", F.expr(dots_expr))
     bits = [
         F.when(F.element_at(F.col("__dots"), i + 1) > 0, 1).otherwise(0).cast("long")

@@ -2145,16 +2145,13 @@ def join_range_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (operator Spark lacks; DuckDB's ASOF JOIN is the
-    oracle shape): latest order at or before each event. Union
-    (sort-merge) strategy: tag + union both sides, one window shuffle
-    on the key, carry the latest order forward with
-    last(ignorenulls) — O(events + orders) with NO join fan-out
-    (measured 2.6x faster than the window strategy at sf0.1: 0.5s vs
-    1.3s min, and the margin grows with orders-per-customer).
-    ``operators.asof`` keeps the window strategy (right choice when
-    the right side broadcasts) and the ``merge_asof``-per-key cogroup
-    strategy (the pandas structural twin); all three are asserted
-    equal in tests."""
+    oracle shape): latest order at or before each event, via
+    ``operators.asof.asof_join``'s sort-merge formulation — tag + union
+    both sides, one window shuffle on the key, carry the latest order
+    forward with last(ignorenulls): O(events + orders) with NO join
+    fan-out (measured 2.6x faster than an equi-join + row_number
+    formulation at sf0.1: 0.5s vs 1.3s min, and the margin grows with
+    orders-per-customer)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate")
     joined = asof_join(
@@ -2166,7 +2163,6 @@ def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="o_orderdate",
         right_cols=["o_orderkey", "o_orderdate"],
         right_order="o_orderkey",
-        strategy="union",
     )
     return joined.select(
         "event_id",

@@ -182,15 +182,3 @@ def test_token_count_edges(spark):
     assert rows[2] == 1
     assert rows[3] == 1  # 'merge' fully merges under DEFAULT_MERGES
     assert encode_word("merge", DEFAULT_MERGES) == ["merge"]
-
-
-def test_arrow_tier_byte_identical_to_jvm_tier(spark, sf_small):
-    from impala_hashset_count_spark.functions.bpe import (
-        bpe_encode_arrow,
-        bpe_encode_expr,
-    )
-
-    d = spark.read.parquet(f"{sf_small}/documents.parquet").limit(100)
-    jvm = {r.doc_id: r.e for r in d.select("doc_id", bpe_encode_expr("text").alias("e")).collect()}
-    arrow = {r.doc_id: r.e for r in d.select("doc_id", bpe_encode_arrow("text").alias("e")).collect()}
-    assert jvm == arrow

@@ -172,73 +172,6 @@ def test_simhash_columnar_equals_grouped_formulation(spark, sf_small):
     assert columnar == grouped
 
 
-def test_numpy_xxh64_matches_spark(spark):
-    """functions/xxh64.py must equal Spark's xxhash64 bit-for-bit on
-    random longs, for both the single-LONG path and the chained
-    (INT, LONG) two-field path the minhash permutations use."""
-    import random
-
-    import numpy as np
-
-    from impala_hashset_count_spark.functions.xxh64 import (
-        SPARK_SEED,
-        xxh64_int,
-        xxh64_long,
-    )
-
-    random.seed(7)
-    # i spans the FULL signed int32 domain (negatives mask to their
-    # two's-complement bit pattern, matching Spark's INT hashing)
-    pairs = [
-        (random.randint(-(2**31), 2**31 - 1), random.randint(-(2**63), 2**63 - 1))
-        for _ in range(500)
-    ]
-    df = spark.createDataFrame(pairs, "i int, x long")
-    got = df.select(
-        F.xxhash64("x").alias("h1"),
-        F.xxhash64(F.col("i").cast("int"), "x").alias("h2"),
-    ).collect()
-    with np.errstate(over="ignore"):
-        for (i, x), r in zip(pairs, got):
-            xs = np.uint64(np.int64(x))
-            assert int(np.int64(xxh64_long(xs, SPARK_SEED))) == r.h1
-            assert int(np.int64(xxh64_long(xs, np.uint64(xxh64_int(i, SPARK_SEED))))) == r.h2
-
-
-def test_minhash_sig_strategies_bit_identical(spark, sf_small):
-    """Arrow numpy XXH64 signatures == pure-JVM HOF signatures on the
-    real documents table, including short docs (empty shingle set ->
-    [NULL]*k on both tiers)."""
-    from impala_hashset_count_spark.operators.dedup import minhash_signatures
-
-    d = load_table(spark, sf_small, "documents")
-    short = spark.createDataFrame([(100001, "one two")], "doc_id long, text string")
-    d = d.select("doc_id", "text").unionByName(short)
-    hof = {
-        r.doc_id: r.sig
-        for r in minhash_signatures(d, "doc_id", "text", strategy="hof").collect()
-    }
-    arrow = {
-        r.doc_id: r.sig
-        for r in minhash_signatures(d, "doc_id", "text", strategy="arrow").collect()
-    }
-    assert arrow == hof
-    assert arrow[100001] == [None] * 64
-
-
-def test_minhash_lsh_pairs_strategy_equality(spark, sf_small):
-    d = load_table(spark, sf_small, "documents")
-    a = {
-        (r.id_1, r.id_2, r.jaccard)
-        for r in minhash_lsh_pairs(d, "doc_id", "text", strategy="arrow").collect()
-    }
-    h = {
-        (r.id_1, r.id_2, r.jaccard)
-        for r in minhash_lsh_pairs(d, "doc_id", "text", strategy="hof").collect()
-    }
-    assert a == h and a
-
-
 def test_lsh_signature_strategies_bit_identical(spark, sf_small):
     """The Arrow numpy-matmul signature pass and the pure-JVM Catalyst
     fold must agree on EVERY band value — this is the property the
@@ -523,6 +456,9 @@ def test_short_docs_yield_no_shingles_not_errors(spark):
     arrays = {r.doc_id: r.shs for r in doc_shingle_arrays(df, "doc_id", "text", 3).collect()}
     assert arrays[1] == [] and arrays[2] == [] and arrays[3] == []
     assert len(arrays[4]) == 2
+    # Empty shingle sets give all-NULL MinHash signatures, so docs 1-3
+    # share every band; exact verification must drop those candidates.
+    assert minhash_lsh_pairs(df, "doc_id", "text", 3).collect() == []
 
 
 def test_ngram_jaccard_identical_docs(spark):

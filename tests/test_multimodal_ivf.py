@@ -269,25 +269,6 @@ def test_bmp_property_roundtrip_random_images():
     run()
 
 
-def test_map_in_arrow_metadata_twin_bit_identical(spark, sf_small):
-    """The mapInArrow face (lengths read from Arrow binary offsets, no
-    per-row Python bytes) must equal the mapInPandas face on the real
-    payload table."""
-    from impala_hashset_count_spark.operators.multimodal import (
-        attach_binary_payload,
-        extract_image_metadata,
-        extract_image_metadata_arrow,
-    )
-    from impala_hashset_count_spark.sources.tables import load_table
-
-    d = attach_binary_payload(
-        load_table(spark, sf_small, "documents"), "doc_id", "text"
-    )
-    a = sorted(map(tuple, extract_image_metadata_arrow(d).collect()))
-    p = sorted(map(tuple, extract_image_metadata(d).collect()))
-    assert a == p and a
-
-
 def test_wav_roundtrip_encode_decode():
     from impala_hashset_count_spark.operators.multimodal import (
         decode_wav,

@@ -257,3 +257,138 @@ def test_driver_threads_only_through_fanout():
                     if pool.search(line):
                         bad.append(f"{os.path.relpath(path, repo)}:{lineno}")
     assert not bad, "driver thread pools outside session.fanout: " + "; ".join(bad)
+
+
+# Top-level package functions/classes that only tests call today. The
+# list may only shrink: give an entry a production caller or delete it
+# with its tests, then drop it here (ROADMAP item 7).
+_TEST_ONLY_ALLOWLIST = frozenset({
+    # functions/bpe.py
+    "bpe_token_count_expr", "bpe_tokens_expr", "encode_word", "learn_bpe",
+    # functions/text.py
+    "char_shingles", "poly_winnow_py",
+    # functions/vectors.py
+    "cosine_int8", "dequantize_int8", "l2_normalize", "quantize_int8",
+    # operators/aggstate.py
+    "agg_state_finalize",
+    # operators/bloom.py
+    "bloom_dedup_incremental",
+    # operators/checks.py
+    "observe_constraints", "satisfies",
+    # operators/cms.py
+    "cms_merge",
+    # operators/corpus_stats.py
+    "top_tokens",
+    # operators/decontaminate.py
+    "_shingled", "semantic_decontaminate",
+    # operators/dedup.py
+    "exact_dedup_incremental", "minhash_lsh_index", "minhash_lsh_pairs_incremental",
+    "ngram_jaccard_pairs_prefix", "semantic_dedup", "simhash_pairs_incremental",
+    # operators/drift.py
+    "drift_oracle_select",
+    # operators/fileindex.py
+    "build_rowgroup_index", "compact_small_files", "prune_rowgroups", "read_pruned",
+    "read_pruned_rowgroups",
+    # operators/hashset_count.py
+    "distinct_sketch_table", "hashset_count_df", "hashset_count_windowed",
+    "rollup_distinct_from_sketches",
+    # operators/jvm_udaf.py
+    "hashset_count_jvm_guarded",
+    # operators/merge.py
+    "merge_scd2",
+    # operators/multimodal.py
+    "decode_audio", "image_dhashes",
+    # operators/quality_model.py
+    "train_quality_model",
+    # operators/quantiles.py
+    "bottomk_accumulate", "bottomk_combine", "quantiles_from_sketch",
+    # operators/similarity.py
+    "assign_ivf_cells_frozen", "ivfpq_topk",
+    # operators/substring_dedup.py
+    "gram_count_index",
+    # operators/zorder.py
+    "cluster_write",
+    # pipelines.py
+    "corpus_token_histogram", "curate_corpus",
+    # register.py
+    "register_all",
+    # sources/pydatasource.py
+    "read_jsonl_manifested", "register_python_datasources",
+    # sources/tables.py
+    "read_source", "write_sink",
+    # streaming/tws.py
+    "hashset_count_tws", "rocksdb_conf",
+    # streaming/windows.py
+    "approx_distinct_stateful", "events_stream", "foreach_batch_parquet_sink",
+    "hashset_count_stateful", "run_to_memory", "sessionize_stateful",
+    "snapshot_changes", "stream_bitmap_distinct_maintenance", "stream_bloom_dedup",
+    "stream_cdc_upsert", "stream_corpus_drift", "stream_dedup_within_watermark",
+    "stream_index_maintenance", "stream_interval_join",
+    "stream_interval_join_full_outer", "stream_interval_join_left_outer",
+    "stream_quantiles_sketch", "stream_session_windows", "stream_sliding_counts",
+    "stream_span_dedup", "stream_summary_maintenance", "stream_tumbling_counts",
+    "vacuum_snapshots",
+})
+
+
+def test_no_new_test_only_functions():
+    """Every top-level package ``def``/``class`` needs a non-test use:
+    a decorator, or its name as a Name, Attribute, import alias or
+    string constant somewhere in the package, ``tools/``, ``bench.py``,
+    ``__spark_entry__.py`` or ``perfbench/`` — outside its own body and
+    outside the package ``__init__.py`` re-exports. Anything else is a
+    second implementation only tests select; it must be deleted, not
+    added to ``_TEST_ONLY_ALLOWLIST``. Allowlisted names that gained a
+    caller or were deleted must leave the list."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "impala_hashset_count_spark")
+
+    def py_files(path):
+        if path.endswith(".py"):
+            return [path]
+        return [os.path.join(root, f) for root, _dirs, files in os.walk(path)
+                for f in files if f.endswith(".py")]
+
+    defined, used = {}, set()
+    for top in ("impala_hashset_count_spark", "tools", "bench.py",
+                "__spark_entry__.py", "perfbench"):
+        for path in py_files(os.path.join(repo, top)):
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            in_pkg = path.startswith(pkg + os.sep)
+            reexports = in_pkg and os.path.basename(path) == "__init__.py"
+            for stmt in tree.body:
+                owner = None
+                if in_pkg and isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    owner = stmt.name
+                    if not stmt.decorator_list:
+                        defined.setdefault(owner, os.path.relpath(path, repo))
+                if reexports and (
+                    isinstance(stmt, ast.ImportFrom)
+                    or (isinstance(stmt, ast.Assign)
+                        and any(getattr(t, "id", None) == "__all__" for t in stmt.targets))
+                ):
+                    continue
+                for node in ast.walk(stmt):
+                    if isinstance(node, ast.Name):
+                        name = node.id
+                    elif isinstance(node, ast.Attribute):
+                        name = node.attr
+                    elif isinstance(node, ast.alias):
+                        name = node.name.rsplit(".", 1)[-1]
+                    elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                        name = node.value
+                    else:
+                        continue
+                    if name != owner:
+                        used.add(name)
+    test_only = {n for n in defined if n not in used}
+    new = sorted(f"{defined[n]}:{n}" for n in test_only - _TEST_ONLY_ALLOWLIST)
+    assert not new, "package functions with no non-test use: " + "; ".join(new)
+    stale = sorted(_TEST_ONLY_ALLOWLIST - test_only)
+    assert not stale, "remove from _TEST_ONLY_ALLOWLIST (now used or gone): " + ", ".join(stale)

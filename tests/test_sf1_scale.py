@@ -114,7 +114,7 @@ def test_sf1_minhash_bucket_cap_fires_on_boilerplate_cluster(spark):
     ship_package(spark)
     d = _t(spark, "documents").select("doc_id", "text")
     docs = doc_shingle_arrays(d, "doc_id", "text", 3, hash_fn="xxhash64")
-    band_rows = _lsh_band_rows(docs, "doc_id", 64, 32, "xxhash64", "hof")
+    band_rows = _lsh_band_rows(docs, "doc_id", 64, 32, "xxhash64")
     sizes = band_rows.groupBy("band_id", "band_hash").agg(
         F.count("*").alias("n")
     )

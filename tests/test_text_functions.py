@@ -1,12 +1,10 @@
 """Unit tests for the text-function corners not exercised by the
-oracle queries: char shingles, rolling hashes, winnowing fingerprints."""
+oracle queries: char/word shingles, winnowing fingerprints."""
 
 from pyspark.sql import functions as F
 
 from impala_hashset_count_spark.functions.text import (
     char_shingles,
-    rolling_hashes,
-    winnowing_fingerprint,
     word_shingles,
 )
 
@@ -33,33 +31,6 @@ def test_word_shingles_short_and_normal(spark):
     ]
     # fewer tokens than n -> empty, not a duplicated/invalid slice
     assert _one(spark, "a b", lambda c: word_shingles(c, 3)) == []
-
-
-def test_winnowing_short_input_empty(spark):
-    assert _one(spark, "abc", lambda c: winnowing_fingerprint(c, 8, 4)) == []
-
-
-def test_rolling_hashes_align_with_shingles(spark):
-    text = "the quick brown fox"
-    hashes = _one(spark, text, lambda c: rolling_hashes(c, 8))
-    shingles = _one(spark, text, lambda c: char_shingles(c, 8))
-    assert len(hashes) == len(shingles) == len(text) - 7
-    # deterministic: same text -> same hashes
-    assert hashes == _one(spark, text, lambda c: rolling_hashes(c, 8))
-
-
-def test_winnowing_robust_to_small_edit(spark):
-    base = "the quick brown fox jumps over the lazy dog " * 4
-    edited = base.replace("lazy", "hazy", 1)
-    other = "completely unrelated text about query planners " * 4
-    fp = lambda t: set(_one(spark, t, lambda c: winnowing_fingerprint(c, 8, 4)))
-    a, b, c = fp(base), fp(edited), fp(other)
-    # a one-word edit preserves most of the fingerprint...
-    overlap_edit = len(a & b) / len(a | b)
-    assert overlap_edit > 0.5, overlap_edit
-    # ...while unrelated text shares (almost) nothing
-    overlap_other = len(a & c) / len(a | c)
-    assert overlap_other < 0.1, overlap_other
 
 
 def test_poly_winnow_arrow_equals_python_reference(spark):
@@ -92,8 +63,8 @@ def test_poly_winnow_arrow_equals_python_reference(spark):
 
 
 def test_poly_winnow_robust_to_small_edit(spark):
-    """Same winnowing property as the xxhash64 tier: local edits keep
-    most blocks, unrelated text shares none."""
+    """Winnowing property: local edits keep most blocks, unrelated
+    text shares none."""
     from impala_hashset_count_spark.functions.text import poly_winnow_py
 
     base = "the quick brown fox jumps over the lazy dog " * 4
