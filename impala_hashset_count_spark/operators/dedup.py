@@ -31,14 +31,11 @@ Scale analysis (100 TB, ~10^10 docs):
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.vectors import cosine
-from ..session import fanout
 from ..sources.tables import plan_bytes, spread_small
 
 
@@ -331,7 +328,7 @@ def doc_shingle_arrays(
     BIGINT)`` in any engine with md5.
 
     SQL-text lambda (not Python) per the HOF canonicalization pitfall
-    documented at ``_sig_expr``."""
+    documented at ``_lsh_band_rows``."""
     toks = spread_small(df).select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
     )
@@ -354,28 +351,6 @@ def doc_shingle_arrays(
     return toks.select(F.col(id_col), F.expr(expr).alias("shs"))
 
 
-def _sig_expr(k: int, hash_fn: str = "xxhash64"):
-    # SQL-text lambdas, NOT Python lambdas: PySpark canonicalizes the
-    # lambda variables of Python-callable HOFs such that k transforms
-    # differing only in a captured literal collapse into ONE expression
-    # (all k mins come out identical — verified on 4.1.2). The CAST
-    # matches F.lit(i)'s IntegerType so hashes equal the groupBy-min
-    # formulation. The md5 tier derives permutation i's hash of a
-    # shingle id x as the 60-bit md5 of '{i}:{x}' — mirrorable as
-    # MIN(CAST('0x' || SUBSTRING(MD5(CONCAT('{i}:', CAST(x AS
-    # VARCHAR))), 1, 15) AS BIGINT)) per doc in any md5-bearing engine.
-    if hash_fn == "xxhash64":
-        perm = "transform(shs, x -> xxhash64(CAST({i} AS INT), x))"
-    else:
-        perm = (
-            "transform(shs, x -> CAST(conv(substring(md5(concat("
-            "'{i}:', CAST(x AS STRING))), 1, 15), 16, 10) AS BIGINT))"
-        )
-    return F.array(
-        *[F.array_min(F.expr(perm.format(i=i))) for i in range(k)]
-    )
-
-
 def _lsh_band_rows(
     docs: DataFrame,
     id_col: str,
@@ -384,37 +359,62 @@ def _lsh_band_rows(
     hash_fn: str,
 ) -> DataFrame:
     """(id, band_id, band_hash) rows from per-doc shingle arrays — the
-    shared banding step of the batch and incremental LSH faces."""
+    shared banding step of the batch and incremental LSH faces.
+
+    Two SQL lambdas build the whole step: the signature maps each
+    permutation index ``i`` in ``sequence(0, k-1)`` to the min of the
+    permuted shingle hashes, and the bands map each ``b`` in
+    ``sequence(0, bands-1)`` to a (band_id, band_hash) struct over the
+    signature slice, exploded by ``inline``. ``i`` and ``b`` are INT,
+    so the hashes equal the groupBy-min formulation with integer
+    permutation keys. The md5 tier derives permutation i's hash of a
+    shingle id x as the 60-bit md5 of '{i}:{x}' — mirrorable as
+    MIN(CAST('0x' || SUBSTRING(MD5(CONCAT('{i}:', CAST(x AS
+    VARCHAR))), 1, 15) AS BIGINT)) per doc in any md5-bearing engine —
+    and a band value is the slice's decimal strings joined by '_'
+    (equality of the string IS equality of the tuple).
+
+    SQL text, not Python lambdas: PySpark canonicalizes the lambda
+    variables of Python-callable HOFs such that transforms differing
+    only in a captured literal collapse into ONE expression (k
+    per-permutation mins built that way all came out identical on
+    4.1.2)."""
     rows = k // bands
-    sig = docs.select(F.col(id_col), _sig_expr(k, hash_fn=hash_fn).alias("sig"))
-
-    def band_val(b: int):
-        sl = F.slice("sig", b * rows + 1, rows)
-        if hash_fn == "xxhash64":
-            return F.xxhash64(F.lit(b), sl)
-        # md5 tier: join the slice's decimal strings — equality of the
-        # string IS equality of the tuple (no extra hash to mirror)
-        return F.concat_ws("_", F.transform(sl, lambda v: v.cast("string")))
-
+    sl = f"slice(__sig, b * {rows} + 1, {rows})"
+    if hash_fn == "xxhash64":
+        perm = "xxhash64(i, x)"
+        band = f"xxhash64(b, {sl})"
+    else:
+        perm = (
+            "CAST(conv(substring(md5(concat(CAST(i AS STRING), ':', "
+            "CAST(x AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+        )
+        band = f"concat_ws('_', transform({sl}, v -> CAST(v AS STRING)))"
+    # shs is bound once, as the outer lambda's s: CollapseProject inlines
+    # a producer that is referenced once, so a bare shs inside the
+    # i-lambda would re-derive an unmaterialized shs (as
+    # minhash_lsh_index passes it) k times per doc — 3.5x slower at sf0.1
+    sig = docs.select(
+        F.col(id_col),
+        F.expr(
+            f"transform(array(shs), s -> transform(sequence(0, {k - 1}), "
+            f"i -> array_min(transform(s, x -> {perm}))))[0]"
+        ).alias("__sig"),
+    )
     return sig.select(
         F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        band_val(b).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
+        F.inline(
+            F.expr(
+                f"transform(sequence(0, {bands - 1}), "
+                f"b -> named_struct('band_id', b, 'band_hash', {band}))"
             )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_hash")
+        ),
+    )
 
 
 def _verified_jaccard_pairs(
     candidates: DataFrame,
-    ex: DataFrame,
+    docs: DataFrame,
     id_col: str,
     threshold: float,
     hot_shingle_docs: int,
@@ -422,71 +422,83 @@ def _verified_jaccard_pairs(
     spill_safe: bool = False,
 ) -> DataFrame:
     """Shared exact-Jaccard verification tail of the batch and
-    incremental MinHash-LSH faces: the narrow guarded inverted-index
-    common-shingle count over ``ex`` (the checkpointed exploded
-    (id, __h) stream of candidate docs only), followed by the size
-    join and the threshold filter. See ``minhash_lsh_pairs`` for the
-    full semantics (hot/cold vocabulary split, exactness argument);
-    this helper exists so both faces share one implementation and the
-    round-9 single-pass statistics materialization."""
-    hot_h = (
+    incremental MinHash-LSH faces, over the checkpointed ``candidates``
+    and the (id, shs) ``docs`` holding every candidate's shingle set:
+    the narrow guarded inverted-index common-shingle count over ``ex``
+    (the checkpointed exploded (id, __sz, __h) stream of candidate docs
+    only) and the threshold filter. See ``minhash_lsh_pairs`` for the
+    full semantics (hot/cold vocabulary split, exactness argument).
+
+    Each stream row carries its doc's set size: ``shs`` is
+    ``array_distinct``, so ``size(shs)`` equals the doc's posting
+    count, and the pair counts carry both sizes to the Jaccard."""
+    cand_ids = candidates.select(
+        F.explode(F.array("id_1", "id_2")).alias(id_col)
+    ).distinct()
+    # cand_ids / hot_h are usually tiny but UNBOUNDED on adversarial
+    # corpora, so no forced broadcast hints — AQE converts these
+    # joins to broadcast at runtime when the built side is actually
+    # small, which is the safe 100 TB default.
+    ex = _eager_checkpoint(
+        docs.join(cand_ids, id_col, "left_semi").select(
+            F.col(id_col),
+            F.size("shs").alias("__sz"),
+            F.explode("shs").alias("__h"),
+        ),
+        checkpoint_mode,
+        spill_safe,
+    )
+    # Materialized ONCE: without it the aggregate subtree is re-embedded
+    # per consumer (the cold anti-join and the hot semi-join) and
+    # static planning/AQE do NOT reuse the stage (measured r9: the
+    # entry's executed plan carried the ``__df`` aggregate 4x). It is
+    # small by construction (bounded by |stream| / cap). A grouped
+    # aggregate, not a window count over ``__h``: the window would send
+    # every posting of a boilerplate shingle to one task — the skew
+    # this guard exists for.
+    hot_h = _eager_checkpoint(
         ex.groupBy("__h")
         .agg(F.count("*").alias("__df"))
         .filter(F.col("__df") > hot_shingle_docs)
-        .select("__h")
+        .select("__h"),
+        checkpoint_mode,
+        spill_safe,
     )
-    # per-doc set sizes, derived from the checkpointed candidate
-    # stream instead of re-scanning docs: shs is array_distinct, so
-    # COUNT(*) per id == size(shs), and only docs that share >= 1
-    # shingle with a candidate partner reach the final join (pairs
-    # with zero common shingles were dropped by the pair_common inner
-    # join in both formulations), so restricting sizes to candidate
-    # docs loses nothing.
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    # Materialize the two small statistics frames ONCE each. Without
-    # this, each frame's aggregate subtree is re-embedded per consumer
-    # and static planning/AQE do NOT reuse the stages (measured r9: the
-    # entry's executed plan carried the ``__df`` aggregate 4x and the
-    # sizes aggregate 2x — six full passes over the exploded
-    # candidate-shingle stream where two suffice; at 100 TB each pass
-    # is a full scan + exchange of that stream). Both depend only on
-    # the already-checkpointed stream, so the two checkpoint jobs run
-    # concurrently. Both are small by construction: hot_h is bounded by
-    # |stream| / cap, sizes is one row per candidate doc.
-    hot_h, sizes = fanout(
-        partial(_eager_checkpoint, hot_h, checkpoint_mode, spill_safe),
-        partial(_eager_checkpoint, sizes, checkpoint_mode, spill_safe),
-    )
+
+    def side(stream: DataFrame, j: int) -> DataFrame:
+        return stream.select(
+            F.col(id_col).alias(f"id_{j}"), F.col("__sz").alias(f"sz_{j}"), "__h"
+        )
+
+    def counted(pairs: DataFrame, common) -> DataFrame:
+        # sz_j is a function of id_j, so max() only carries it; keying
+        # on (id_1, id_2) alone keeps the aggregate hash-partitioned
+        # the way the candidates join below needs (keying on all four
+        # columns re-shuffles the pair counts before that join)
+        return pairs.groupBy("id_1", "id_2").agg(
+            common.alias("__common"), F.max("sz_1").alias("sz_1"),
+            F.max("sz_2").alias("sz_2"),
+        )
+
     ex_cold = ex.join(hot_h, "__h", "left_anti")
-    pc_cold = (
-        ex_cold.select(F.col(id_col).alias("id_1"), "__h")
-        .join(ex_cold.select(F.col(id_col).alias("id_2"), "__h"), "__h")
-        .filter(F.col("id_1") < F.col("id_2"))
-        .groupBy("id_1", "id_2")
-        .agg(F.count("*").alias("__common"))
+    pc_cold = counted(
+        side(ex_cold, 1)
+        .join(side(ex_cold, 2), "__h")
+        .filter(F.col("id_1") < F.col("id_2")),
+        F.count("*"),
     )
     ex_hot = ex.join(hot_h, "__h", "left_semi")
-    pc_hot = (
-        candidates
-        .join(ex_hot.select(F.col(id_col).alias("id_1"), "__h"), "id_1")
-        .join(ex_hot.select(F.col(id_col).alias("id_2"), "__h"), ["id_2", "__h"])
-        .groupBy("id_1", "id_2")
-        .agg(F.count("*").alias("__common"))
+    pc_hot = counted(
+        candidates.join(side(ex_hot, 1), "id_1")
+        .join(side(ex_hot, 2), ["id_2", "__h"]),
+        F.count("*"),
     )
-    pair_common = (
-        pc_cold.unionByName(pc_hot)
-        .groupBy("id_1", "id_2")
-        .agg(F.sum("__common").alias("__common"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("id_1"), F.col("__sz").alias("sz_1"))
-    s2 = sizes.select(F.col(id_col).alias("id_2"), F.col("__sz").alias("sz_2"))
+    pair_common = counted(pc_cold.unionByName(pc_hot), F.sum("__common"))
     jac = F.col("__common") / (
         F.col("sz_1") + F.col("sz_2") - F.col("__common")
     )
     return (
         candidates.join(pair_common, ["id_1", "id_2"])
-        .join(s1, "id_1")
-        .join(s2, "id_2")
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_1", "id_2", F.round("jaccard", 4).alias("jaccard"))
@@ -550,9 +562,10 @@ def minhash_lsh_pairs(
     O(cap * B). None (default) keeps exact LSH semantics for parity
     runs; always set it in production.
 
-    Fault tolerance: the two eager checkpoints below truncate lineage
-    at call time; ``checkpoint_mode`` picks where the blocks live —
-    ``'local'`` (default: executor-local, fastest, executor loss fails
+    Fault tolerance: three eager checkpoints (the candidate pairs, the
+    candidate docs' shingle stream and its hot-shingle set) truncate
+    lineage at call time; ``checkpoint_mode`` picks where the blocks
+    live — ``'local'`` (default: executor-local, fastest, executor loss fails
     the run — right for bench/parity surfaces where re-running is
     cheap) or ``'reliable'`` (the configured ``sc.setCheckpointDir``
     path, survives executor loss — the long-job 100 TB posture). Both
@@ -603,8 +616,8 @@ def minhash_lsh_pairs(
     # with no cap):
     #  1. the exploded stream is SEMI-JOINED to the candidate id set
     #     first — only docs that survived banding can contribute to a
-    #     verified pair (pair_common is inner-joined with candidates
-    #     below), so counting shingles of non-candidate docs is pure
+    #     verified pair (_verified_jaccard_pairs inner-joins the
+    #     counts with candidates), so counting shingles of non-candidate docs is pure
     #     waste. Candidate ids are O(pairs), tiny after banding; AQE
     #     broadcasts the semi-join and the corpus-wide stream never
     #     shuffles.
@@ -625,29 +638,15 @@ def minhash_lsh_pairs(
     # and truncates the lineage so the plan doesn't re-embed the band
     # self-join per consumer. It is O(pairs) — tiny after banding.
     candidates = _eager_checkpoint(candidates, checkpoint_mode, spill_safe)
-    cand_ids = (
-        candidates.select(
-            F.explode(F.array("id_1", "id_2")).alias(id_col)
-        ).distinct()
-    )
-    # cand_ids / hot_h are usually tiny but UNBOUNDED on adversarial
-    # corpora, so no forced broadcast hints — AQE converts these
-    # joins to broadcast at runtime when the built side is actually
-    # small, which is the safe 100 TB default.
-    ex = _eager_checkpoint(
-        docs.join(cand_ids, id_col, "left_semi").select(
-            F.col(id_col), F.explode("shs").alias("__h")
-        ),
-        checkpoint_mode,
-        spill_safe,
-    )
-    # docs fed banding (inside the candidates checkpoint) and ex —
-    # nothing below scans it again; release the executors' cache.
-    docs.unpersist()
-    return _verified_jaccard_pairs(
-        candidates, ex, id_col, threshold, hot_shingle_docs,
+    pairs = _verified_jaccard_pairs(
+        candidates, docs, id_col, threshold, hot_shingle_docs,
         checkpoint_mode, spill_safe,
     )
+    # docs fed banding (inside the candidates checkpoint) and the
+    # checkpointed shingle stream — nothing in pairs scans it again;
+    # release the executors' cache.
+    docs.unpersist()
+    return pairs
 
 
 def minhash_lsh_index(
@@ -762,7 +761,7 @@ def minhash_lsh_pairs_incremental(
     # sweep measured that wide form shipping ~1.5 KB of shingle arrays
     # per candidate through the exchanges (37 GB at 2.5e7 candidates).
     # The stream is restricted to candidate ids first (only they can
-    # reach the inner join below) and shingles hotter than
+    # reach the final inner join) and shingles hotter than
     # `hot_shingle_docs` candidate docs route through the
     # candidate-driven membership probe, so one boilerplate shingle in
     # the history can't make the daily batch's verification quadratic.
@@ -771,26 +770,14 @@ def minhash_lsh_pairs_incremental(
     # equality-tested against it in tests/test_dedup_similarity.py).
     # checkpoint_mode as in the batch face (see _eager_checkpoint).
     candidates = _eager_checkpoint(candidates, checkpoint_mode, spill_safe)
-    cand_ids = (
-        candidates.select(
-            F.explode(F.array("id_1", "id_2")).alias(id_col)
-        ).distinct()
-    )
     # Re-ingested ids: prefer the NEW batch's row (see the id contract
     # in the docstring) — a plain union would explode BOTH copies'
     # shingles and inflate __common/__sz asymmetrically.
     all_docs = stored_docs.join(
         new_docs.select(id_col), id_col, "left_anti"
     ).unionByName(new_docs)
-    ex = _eager_checkpoint(
-        all_docs.join(cand_ids, id_col, "left_semi").select(
-            F.col(id_col), F.explode("shs").alias("__h")
-        ),
-        checkpoint_mode,
-        spill_safe,
-    )
     pairs = _verified_jaccard_pairs(
-        candidates, ex, id_col, threshold, hot_shingle_docs,
+        candidates, all_docs, id_col, threshold, hot_shingle_docs,
         checkpoint_mode, spill_safe,
     )
     return pairs, new_docs, new_bands
@@ -1097,7 +1084,7 @@ def simhash_signatures(
     formulation; tests/test_plans.py asserts the no-Exchange plan).
 
     SQL-text lambdas per the HOF canonicalization pitfall at
-    ``_sig_expr`` (64 aggregates differing only in a captured literal
+    ``_lsh_band_rows`` (64 aggregates differing only in a captured literal
     would collapse as Python lambdas)."""
     if hash_fn == "xxhash64":
         tok_hash = F.xxhash64

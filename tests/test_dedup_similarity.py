@@ -172,6 +172,75 @@ def test_simhash_columnar_equals_grouped_formulation(spark, sf_small):
     assert columnar == grouped
 
 
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_lsh_band_rows_equal_grouped_formulation(spark, sf_small, hash_fn):
+    """The two-lambda signature + banding step must equal the
+    explode + per-permutation-column + groupBy-min formulation row for
+    row on both hash tiers, and no doc's k mins may be all equal (the
+    collapse that Python-lambda HOFs differing only in a captured
+    literal produce)."""
+    from impala_hashset_count_spark.operators.dedup import (
+        _lsh_band_rows,
+        doc_shingle_arrays,
+    )
+
+    k, bands = 64, 32
+    rows = k // bands
+    d = load_table(spark, sf_small, "documents")
+    # empty shingle sets have no postings to group; only non-empty sets
+    # have a min to compare
+    docs = doc_shingle_arrays(d, "doc_id", "text", 3, hash_fn=hash_fn).filter(
+        F.size("shs") > 0
+    )
+
+    def perm(i):
+        if hash_fn == "xxhash64":
+            return F.xxhash64(F.lit(i), F.col("h"))
+        s = F.concat(F.lit(f"{i}:"), F.col("h").cast("string"))
+        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+    mins = (
+        docs.select("doc_id", F.explode("shs").alias("h"))
+        .select("doc_id", *[perm(i).alias(f"m{i}") for i in range(k)])
+        .groupBy("doc_id")
+        .agg(*[F.min(f"m{i}").alias(f"m{i}") for i in range(k)])
+    )
+    sigs = mins.collect()
+    assert sigs
+    for r in sigs:
+        assert len({r[f"m{i}"] for i in range(k)}) > 1, r["doc_id"]
+
+    def band_val(b):
+        sl = [F.col(f"m{b * rows + j}") for j in range(rows)]
+        if hash_fn == "xxhash64":
+            return F.xxhash64(F.lit(b), F.array(*sl))
+        return F.concat_ws("_", *[c.cast("string") for c in sl])
+
+    grouped = mins.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band_id"), band_val(b).alias("band_hash"))
+                    for b in range(bands)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_hash")
+    ref = sorted(tuple(r) for r in grouped.collect())
+    lam = sorted(
+        tuple(r) for r in _lsh_band_rows(docs, "doc_id", k, bands, hash_fn).collect()
+    )
+    assert len(ref) == len(sigs) * bands
+    assert lam == ref
+    # an unmaterialized shingle set is derived once per doc, outside
+    # the per-permutation lambda (not re-derived k times inside it)
+    raw = doc_shingle_arrays(d, "doc_id", "text", 3, hash_fn=hash_fn)
+    plan = _lsh_band_rows(raw, "doc_id", k, bands, hash_fn)._jdf.queryExecution()
+    plan = plan.executedPlan().toString()
+    assert plan.index("array_distinct") < plan.index("array_min")
+
+
 def test_lsh_signature_strategies_bit_identical(spark, sf_small):
     """The Arrow numpy-matmul signature pass and the pure-JVM Catalyst
     fold must agree on EVERY band value — this is the property the
