@@ -1,8 +1,15 @@
-"""Batch-equivalent forms of the streaming operators + the multimodal
-metadata query. ``F.window``/sessionization semantics are identical in
-batch and streaming (same WindowExec/session logic); the streaming tests
-(tests/test_streaming.py) assert the actual readStream pipelines equal
-these plans, and these plans carry the DuckDB oracles."""
+"""The streaming operators as batch registry entries + the multimodal
+metadata query.
+
+``streaming_windows_batch`` and ``streaming_interval_join_batch`` run
+the ``streaming/windows.py`` faces themselves on the static events
+table: ``withWatermark`` is a no-op on a batch DataFrame, so the DuckDB
+oracles check the streaming operators' own code. Three batch twins
+remain, each for the reason in its docstring: ``dedup_batch`` and
+``distinct_batch`` because their faces cannot run on a batch frame,
+``sessionize_batch`` because it is faster than the face. The streaming
+tests (tests/test_streaming.py) assert the live readStream pipelines
+equal these plans."""
 
 from __future__ import annotations
 
@@ -19,47 +26,17 @@ from ..operators.multimodal import (
 )
 from ..session import fanout
 from ..sources.tables import load_table
+from ..streaming.windows import (
+    stream_interval_join_full_outer,
+    stream_sliding_counts,
+    stream_static_enrich,
+    stream_tumbling_counts,
+)
 from .registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def tumbling_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 6h event-time windows, exact distinct users — the batch
-    twin of streaming.stream_tumbling_counts (epoch-aligned windows in
-    both engines; UTC session TZ keeps strings identical).
-    tests/test_streaming.py asserts the live readStream pipeline equals
-    this plan."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.count_distinct("user_id").alias("distinct_users"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "distinct_users",
-        )
-    )
-
-
-def sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 6h/3h windows: every event belongs to exactly 2 windows
-    (the oracle materializes both placements explicitly)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "6 hours", "3 hours").alias("win"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-        )
-    )
 
 
 @register(
@@ -95,18 +72,19 @@ def sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_windows_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 6h and sliding 6h/3h event-time windows in one tagged
-    result — the batch twins of stream_tumbling_counts and
-    stream_sliding_counts (`F.window`'s semantics are identical in batch
-    and streaming, so these plans ARE the streaming operators minus the
-    watermark). One events scan feeds both window placements."""
-    t = tumbling_batch(spark, sf_dir).select(
+    result, built by the streaming faces ``stream_tumbling_counts`` and
+    ``stream_sliding_counts`` on the static events table (``withWatermark``
+    is a no-op on a batch DataFrame). One events scan feeds both window
+    placements."""
+    ev = _t(spark, sf_dir, "events")
+    t = stream_tumbling_counts(ev).select(
         F.lit("tumbling").alias("kind"),
         "window_start",
         "event_type",
         "n_events",
         "distinct_users",
     )
-    s = sliding_batch(spark, sf_dir).select(
+    s = stream_sliding_counts(ev).select(
         F.lit("sliding").alias("kind"),
         "window_start",
         F.lit(None).cast("string").alias("event_type"),
@@ -119,7 +97,9 @@ def streaming_windows_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min islands) per user — the batch
     twin of both session_window streaming and the
-    applyInPandasWithState custom operator."""
+    applyInPandasWithState custom operator (``sessionize_stateful``).
+    Kept because ``stream_session_windows`` plus a per-user
+    re-aggregation gives the same rows but runs slower."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
@@ -146,7 +126,9 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First event per (user, type) — the deterministic batch twin of
-    dropDuplicatesWithinWatermark."""
+    dropDuplicatesWithinWatermark. Kept because Spark rejects the face
+    on a batch frame (``dropDuplicatesWithinWatermark is not supported
+    with batch DataFrames``)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -160,7 +142,9 @@ def distinct_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type running exact distinct users — the batch twin of
     ``streaming.windows.hashset_count_stateful`` with the reference's
     faithful semantics (string count, NULL — not "0" — when every
-    user_id in the group is NULL; /root/reference/hashset-count.cc:507-510)."""
+    user_id in the group is NULL; the reference's hashset-count.cc:507-510).
+    Kept because Spark rejects the face on a batch frame
+    (``applyInPandasWithState is unsupported in batch query``)."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.when(F.count("user_id") == 0, F.lit(None).cast("string"))
@@ -373,62 +357,30 @@ def streaming_state_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of ALL THREE stream-stream interval joins, tagged:
-    ``pair`` rows are the INNER semantics (same-user follow-up within
-    10 minutes); ``lone`` rows are events with NO follow-up — exactly
-    the rows the LEFT OUTER streaming face
-    (``streaming/windows.py::stream_interval_join_left_outer``)
-    null-pads after watermark eviction, here as a LEFT ANTI join
-    (pair + lone == the left-outer result); ``lone_r`` rows are events
-    with no PRECEDING event in-window — the extra rows the FULL OUTER
-    face (``streaming/windows.py::stream_interval_join_full_outer``)
-    emits beyond left-outer, here as the mirrored anti join (pair +
-    lone + lone_r == the full-outer result). Equi-key on user_id keeps
-    all branches hash joins with a range residual — never a time-only
-    cross join. The ``enrich`` branch is the stream-STATIC join twin
-    (``stream_static_enrich``): every event left-joined to its
-    customer's nation key over a broadcast dimension — stateless, no
-    watermark, the standard streaming enrichment pattern."""
+    """All three stream-stream interval joins and the stream-static
+    enrichment, tagged, from the streaming faces run on the static
+    events table. One ``stream_interval_join_full_outer(ev, ev)`` gives
+    all join rows, tagged by the NULL side (``event_id`` is the events
+    key, never NULL, so a NULL side marks an unmatched row):
+    - ``pair``: the INNER semantics, a same-user follow-up within 10
+      minutes;
+    - ``lone`` (NULL ``r_event``): an event with NO follow-up; pair +
+      lone is the LEFT OUTER face's result;
+    - ``lone_r`` (NULL ``l_event``): an event with no PRECEDING event
+      in-window; pair + lone + lone_r is the FULL OUTER result.
+    The ``enrich`` branch is ``stream_static_enrich``: every event
+    left-joined to its customer's nation key over a broadcast dimension
+    — stateless, no watermark."""
     ev = _t(spark, sf_dir, "events")
-    l = ev.select(
-        F.col("user_id").alias("l_user"),
-        F.col("event_id").alias("l_event"),
-        F.col("ts").alias("l_ts"),
-    )
-    r = ev.select(
-        F.col("user_id").alias("r_user"),
-        F.col("event_id").alias("r_event"),
-        F.col("ts").alias("r_ts"),
-    )
-    cond = (
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 10 MINUTES"))
-    )
-    pairs = l.join(r, cond).select(
-        F.lit("pair").alias("tag"),
-        F.col("l_user").alias("user_id"),
+    joined = stream_interval_join_full_outer(ev, ev).select(
+        F.when(F.col("l_event").isNull(), "lone_r")
+        .when(F.col("r_event").isNull(), "lone")
+        .otherwise("pair")
+        .alias("tag"),
+        "user_id",
         "l_event",
         "r_event",
     )
-    lone = l.join(r, cond, "left_anti").select(
-        F.lit("lone").alias("tag"),
-        F.col("l_user").alias("user_id"),
-        "l_event",
-        F.lit(None).cast("long").alias("r_event"),
-    )
-    lone_r = r.join(l, cond, "left_anti").select(
-        F.lit("lone_r").alias("tag"),
-        F.col("r_user").alias("user_id"),
-        F.lit(None).cast("long").alias("l_event"),
-        "r_event",
-    )
-    # stream-STATIC enrichment twin (streaming face:
-    # streaming/windows.py::stream_static_enrich — no watermark, no
-    # join state, dimension broadcast): each event left-joined to its
-    # customer's nation key.
-    from ..streaming.windows import stream_static_enrich
-
     cust = _t(spark, sf_dir, "customer")
     enrich = stream_static_enrich(
         ev, cust, "user_id", "c_custkey", ("c_nationkey",), "left"
@@ -438,7 +390,7 @@ def streaming_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_id").alias("l_event"),
         F.col("c_nationkey").cast("long").alias("r_event"),
     )
-    return pairs.unionByName(lone).unionByName(lone_r).unionByName(enrich)
+    return joined.unionByName(enrich)
 
 
 def _jpeg_oracle_sql() -> tuple[str, str]:

@@ -102,13 +102,7 @@ _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one star-schema table (memoized per session —
-    see ``_TABLE_MEMO``).
-
-    ``events.ts`` is physically TIMESTAMP(NANOS), which Spark's vectorized
-    parquet reader rejects; we read nanos as long and convert to a
-    microsecond timestamp (identical to DuckDB's nanos->micros
-    truncation, keeping the oracle comparable).
-    """
+    see ``_TABLE_MEMO``; ``events`` goes through ``read_events``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     memo = _TABLE_MEMO.setdefault(spark, {})
@@ -123,17 +117,34 @@ def _load_table_uncached(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
-            )
-        return df
+        return read_events(spark, table_path(sf_dir, name))
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def read_events(
+    spark: SparkSession, path: str, stream_dir: str | None = None
+) -> DataFrame:
+    """The events parquet at ``path`` with ``ts`` as a microsecond
+    timestamp: a batch scan, or with ``stream_dir`` a file-source stream
+    of that directory under the footer schema of ``path``.
+
+    Older testdata stores ``ts`` as TIMESTAMP(NANOS), which Spark's
+    vectorized parquet reader rejects; it is read as long nanos and
+    truncated to microseconds (identical to DuckDB's nanos->micros
+    truncation, keeping the oracle comparable). A real timestamp column
+    passes through."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if stream_dir is not None:
+        df = spark.readStream.schema(df.schema).parquet(stream_dir)
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn(
+            "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
+        )
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -16,9 +16,13 @@ how long the stream runs:
   streaming analogue of the reference's init/update/merge/finalize
   state machine, `/root/reference/hashset-count.h:30-34`).
 
-Tests drive these with the parquet file source + a memory sink and
+The registry entries in plans/streaming_batch.py run the window and
+interval-join faces on the static events table (``withWatermark`` is a
+no-op on a batch DataFrame), so the DuckDB oracles check this code.
+Tests drive the faces with the parquet file source + a memory sink and
 ``processAllAvailable()`` (synchronous drain), then assert equality
-with the batch-equivalent plans in plans/streaming_batch.py.
+with those entries, or with the batch twins kept for the faces that
+cannot run on a batch frame.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import table_path
+from ..sources.tables import read_events, table_path
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,11 +40,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file source requires a DIRECTORY (it tails new files as they
     land — the production shape); the driver testdata is a single
     parquet file, so we stage a symlink dir. readStream needs an
-    explicit schema, so we take it from the parquet footer via a batch
-    read (a metadata-only job) — this keeps the stream in lockstep with
-    the batch scan whether `ts` is physically TIMESTAMP(NANOS) (read as
-    long, normalized to a microsecond timestamp) or a real timestamp
-    column."""
+    explicit schema; ``read_events`` takes it from the parquet footer
+    via a batch read (a metadata-only job) and applies the batch scan's
+    ``ts`` conversion, so the stream stays in lockstep with
+    ``load_table``."""
     import os
     import tempfile
 
@@ -55,17 +58,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    footer_schema = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(footer_schema).parquet(stage)
-    if isinstance(footer_schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn(
-            "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
-        )
-    elif isinstance(footer_schema["ts"].dataType, T.TimestampNTZType):
+    raw = read_events(spark, src, stream_dir=stage)
+    if isinstance(raw.schema["ts"].dataType, T.TimestampNTZType):
         # Watermarks demand TIMESTAMP (LTZ); the session TZ is pinned
-        # UTC, so this cast is wall-clock exact and the batch twins
-        # (which keep NTZ) render identical window strings.
+        # UTC, so this cast is wall-clock exact and the batch scan
+        # (which keeps NTZ) renders identical window strings.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
 
@@ -400,8 +397,9 @@ def stream_static_enrich(
     planner because unmatched STATIC rows can never finalize).
 
     Returns the stream's rows with ``dim_cols`` appended (NULL where
-    the dimension has no match under ``how='left'``). Batch twin:
-    the 'enrich' branch of ``streaming_interval_join_batch``."""
+    the dimension has no match under ``how='left'``). The 'enrich'
+    branch of ``streaming_interval_join_batch`` runs it on the static
+    events table."""
     dim = F.broadcast(
         static_dim.select(
             F.col(on_right).alias("__dim_key"),
@@ -422,7 +420,8 @@ def stream_interval_join_full_outer(
     state. Right-side-only rows surface with NULL l_event and the
     user_id taken from the right row — the shared body guarantees the
     interval/watermark semantics match the inner and left-outer
-    faces."""
+    faces. ``streaming_interval_join_batch`` runs it on the static
+    events table and tags its pair/lone/lone_r rows."""
     joined = _interval_join_raw(left, right, "fullOuter")
     return joined.select(
         F.coalesce(F.col("l_user"), F.col("r_user")).alias("user_id"),

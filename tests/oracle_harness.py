@@ -174,7 +174,7 @@ def compare_query_folded(
 
     t0 = _time.perf_counter()
     sdf = fn(spark, sf_dir)
-    s_cols, s_n, s_h = _fold_spark(sdf)
+    s_fold = _fold_spark(sdf)
     if timings is not None:
         timings["spark_sec"] = round(_time.perf_counter() - t0, 1)
 
@@ -195,6 +195,20 @@ def compare_query_folded(
     except Exception:  # pragma: no cover - non-py4j sessions
         pass
 
+    compare_fold_with_oracle(sf_dir, name, s_fold, oracle, oracle_fn, timings)
+
+
+def compare_fold_with_oracle(
+    sf_dir: str, name: str, s_fold, oracle: str, oracle_fn=None,
+    timings: dict | None = None,
+) -> None:
+    """The DuckDB half of ``compare_query_folded``: fold the oracle's
+    result and assert columns, row count and value hash equal
+    ``s_fold``, a ``_fold_spark`` result. Lets one Spark-side fold be
+    checked against several oracle forms."""
+    import time as _time
+
+    s_cols, s_n, s_h = s_fold
     t1 = _time.perf_counter()
     con = duckdb_connection(sf_dir)
     try:

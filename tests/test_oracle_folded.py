@@ -17,7 +17,9 @@ from impala_hashset_count_spark.plans import all_queries
 
 from .oracle_harness import (
     _canon_cell,
+    _fold_spark,
     _make_canon,
+    compare_fold_with_oracle,
     compare_query_folded,
     compare_query_tolerant,
 )
@@ -128,24 +130,36 @@ def test_tolerant_compare_accepts_float_noise_rejects_real_drift(
     assert math.isclose(1.0, 1.0 + 1e-12, rel_tol=1e-9)
 
 
-def test_branch_split_oracle_is_fold_identical(spark, sf_small):
+@pytest.fixture(scope="module")
+def branch_split_folds(spark, sf_small):
+    """The Spark-side fold of every entry the sf10 sweep routes through
+    branch-split oracles, built and run once for both oracle forms the
+    two tests below compare it with."""
+    from tools.sf1_oracle_sweep import BRANCH_SPLIT
+
+    return {
+        name: _fold_spark(all_queries()[name].fn(spark, sf_small))
+        for name in sorted(BRANCH_SPLIT)
+    }
+
+
+def test_branch_split_oracle_is_fold_identical(sf_small, branch_split_folds):
     """The sf10 sweep executes multi-branch oracles branch-at-a-time
     (tools/sf1_oracle_sweep._SequentialBranches) so DuckDB's peak is
     one branch's working set, not all of them at once. The fold is an
     order-insensitive modular sum, so the branch-split cursor must
     produce the exact signal of the single-cursor oracle — proven here
-    by running the full folded compare through the adapter on every
-    entry the sweep routes this way (the 9-branch hygiene oracle and
-    the 3-branch Jaccard oracle)."""
-    from tools.sf1_oracle_sweep import BRANCH_SPLIT, _SequentialBranches
+    by comparing the Spark fold with the folded oracle through the
+    adapter on every entry the sweep routes this way (the 9-branch
+    hygiene oracle and the 3-branch Jaccard oracle)."""
+    from tools.sf1_oracle_sweep import _SequentialBranches
 
-    for name in sorted(BRANCH_SPLIT):
+    for name, s_fold in branch_split_folds.items():
         q = all_queries()[name]
-        compare_query_folded(
-            spark,
+        compare_fold_with_oracle(
             sf_small,
             name,
-            q.fn,
+            s_fold,
             q.oracle,
             oracle_fn=lambda con, _sql=q.oracle: _SequentialBranches(
                 con, _sql
@@ -153,7 +167,9 @@ def test_branch_split_oracle_is_fold_identical(spark, sf_small):
         )
 
 
-def test_branch_split_prefix_export_is_fold_identical(spark, sf_small, tmp_path):
+def test_branch_split_prefix_export_is_fold_identical(
+    sf_small, branch_split_folds, tmp_path
+):
     """The sf10 sweep's prefix-export mode (r9): MATERIALIZED CTEs are
     COPY'd to parquet once and branches run over views of the exports
     plus the remaining CTE defs. Must produce the exact folded signal
@@ -161,15 +177,14 @@ def test_branch_split_prefix_export_is_fold_identical(spark, sf_small, tmp_path)
     ones with NO materialized CTE (hashset_count_tiers), which must
     degrade to the r8 path."""
     import tests.oracle_harness as oh
-    from tools.sf1_oracle_sweep import BRANCH_SPLIT, _SequentialBranches
+    from tools.sf1_oracle_sweep import _SequentialBranches
 
-    for name in sorted(BRANCH_SPLIT):
+    for name, s_fold in branch_split_folds.items():
         q = all_queries()[name]
-        compare_query_folded(
-            spark,
+        compare_fold_with_oracle(
             sf_small,
             name,
-            q.fn,
+            s_fold,
             q.oracle,
             oracle_fn=lambda con, _sql=q.oracle, _n=name: _SequentialBranches(
                 con, _sql,

@@ -324,9 +324,8 @@ _TEST_ONLY_ALLOWLIST = frozenset({
     "snapshot_changes", "stream_bitmap_distinct_maintenance", "stream_bloom_dedup",
     "stream_cdc_upsert", "stream_corpus_drift", "stream_dedup_within_watermark",
     "stream_index_maintenance", "stream_interval_join",
-    "stream_interval_join_full_outer", "stream_interval_join_left_outer",
-    "stream_quantiles_sketch", "stream_session_windows", "stream_sliding_counts",
-    "stream_span_dedup", "stream_summary_maintenance", "stream_tumbling_counts",
+    "stream_interval_join_left_outer", "stream_quantiles_sketch",
+    "stream_session_windows", "stream_span_dedup", "stream_summary_maintenance",
     "vacuum_snapshots",
 })
 

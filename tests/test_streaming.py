@@ -1,5 +1,6 @@
 """True Structured Streaming runs (readStream -> memory sink, drained
-synchronously) asserted equal to their batch twins."""
+synchronously) asserted equal to the registry entries that run the same
+faces on the static table, or to the batch twins kept beside them."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,41 +26,25 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_stream_tumbling_equals_batch(spark, sf_small):
-    from impala_hashset_count_spark.plans.streaming_batch import tumbling_batch
+def _windows_slice(spark, sf_dir, kind):
+    merged = QUERIES["streaming_windows_batch"].fn(spark, sf_dir)
+    return merged.filter(F.col("kind") == kind)
 
+
+def test_stream_tumbling_equals_batch(spark, sf_small):
     ev = events_stream(spark, sf_small)
     out = run_to_memory(stream_tumbling_counts(ev), "t_tumbling")
-    batch = tumbling_batch(spark, sf_small)
+    batch = _windows_slice(spark, sf_small, "tumbling")
     cols = ["window_start", "event_type", "n_events", "distinct_users"]
     assert _rows(out, cols) == _rows(batch, cols)
 
 
 def test_stream_sliding_equals_batch(spark, sf_small):
-    from impala_hashset_count_spark.plans.streaming_batch import sliding_batch
-
     ev = events_stream(spark, sf_small)
     out = run_to_memory(stream_sliding_counts(ev), "t_sliding")
-    batch = sliding_batch(spark, sf_small)
+    batch = _windows_slice(spark, sf_small, "sliding")
     cols = ["window_start", "n_events"]
     assert _rows(out, cols) == _rows(batch, cols)
-
-
-def test_merged_streaming_windows_query_covers_both(spark, sf_small):
-    """The registry's merged streaming_windows_batch must equal the
-    union of its two component plans."""
-    from impala_hashset_count_spark.plans.streaming_batch import (
-        sliding_batch,
-        tumbling_batch,
-    )
-
-    merged = QUERIES["streaming_windows_batch"].fn(spark, sf_small)
-    t = merged.filter(F.col("kind") == "tumbling")
-    s = merged.filter(F.col("kind") == "sliding")
-    cols_t = ["window_start", "event_type", "n_events", "distinct_users"]
-    assert _rows(t, cols_t) == _rows(tumbling_batch(spark, sf_small), cols_t)
-    cols_s = ["window_start", "n_events"]
-    assert _rows(s, cols_s) == _rows(sliding_batch(spark, sf_small), cols_s)
 
 
 def test_stream_session_windows_counts(spark, sf_small):
@@ -74,6 +59,39 @@ def test_stream_session_windows_counts(spark, sf_small):
     batch = sessionize_batch(spark, sf_small)
     batch_counts = {r["user_id"]: r["n_sessions"] for r in batch.collect()}
     assert stream_counts == batch_counts
+
+
+def test_session_gap_tie_is_one_session(spark, tmp_path):
+    """An event exactly one gap (30 min) after the previous one extends
+    the session: events at minutes 0, 30 and 70 are 2 sessions in the
+    session_window face, the gap-islands twin and the stateful
+    operator alike."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0)
+    ts = [t0 + dt.timedelta(minutes=m) for m in (0, 30, 70)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7, 7, 7], pa.int64()),
+            "event_type": ["click"] * 3,
+        }),
+        tmp_path / "events.parquet",
+    )
+    sf_dir = str(tmp_path)
+
+    face = stream_session_windows(load_table(spark, sf_dir, "events"))
+    assert face.count() == 2
+    twin = sessionize_batch(spark, sf_dir).collect()
+    assert [(r.user_id, r.n_sessions) for r in twin] == [(7, 2)]
+    out = run_to_memory(
+        sessionize_stateful(events_stream(spark, sf_dir)), "t_session_tie", "update"
+    )
+    assert [(r.user_id, r.n_sessions) for r in out.collect()] == [(7, 2)]
 
 
 def test_stream_dedup_within_watermark(spark, sf_small):
@@ -124,8 +142,9 @@ def test_stream_interval_join_equals_batch(spark, sf_small):
 
 def test_stream_static_enrich_equals_batch(spark, sf_small):
     """Live readStream x static broadcast dimension: the stateless
-    enrichment join must equal the batch twin row-for-row (including
-    NULL nation keys for events whose user has no customer row)."""
+    enrichment join must equal the registry entry's enrich branch (the
+    same face on the static table) row-for-row, including NULL nation
+    keys for events whose user has no customer row."""
     from impala_hashset_count_spark.sources.tables import load_table
     from impala_hashset_count_spark.streaming.windows import stream_static_enrich
 
@@ -501,7 +520,8 @@ def test_available_now_trigger_drains_and_terminates(spark, sf_small, tmp_path):
     everything currently in the source in rate-limited micro-batches,
     then STOP; unlike processAllAvailable it terminates on its own and
     records a final checkpoint for the next incremental run). The
-    drained windowed aggregation must equal the batch twin."""
+    drained windowed aggregation must equal the registry entry's
+    tumbling slice."""
     ev = events_stream(spark, sf_small)
     agg = stream_tumbling_counts(ev)
     q = (
@@ -517,10 +537,9 @@ def test_available_now_trigger_drains_and_terminates(spark, sf_small, tmp_path):
         (r.window_start, r.event_type): r.n_events
         for r in spark.table("t_available_now").collect()
     }
-    batch = QUERIES["streaming_windows_batch"].fn(spark, sf_small)
     expect = {
         (r.window_start, r.event_type): r.n_events
-        for r in batch.filter("kind = 'tumbling'").collect()
+        for r in _windows_slice(spark, sf_small, "tumbling").collect()
     }
     assert got == expect
 
