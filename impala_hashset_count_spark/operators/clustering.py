@@ -24,9 +24,9 @@ supplies the clustering half in the repo's oracle-certifiable style:
 
 Scale shape (the 100 TB story): classic distributed Lloyd.
 Assignment is a map-only whole-stage-codegen projection against a
-k x dim literal array (zero shuffle, zero join — the same staged-HOF
-device as `similarity._signature_bands`); the centroid update is ONE
-groupBy(cluster) with map-side partial aggregation down to k rows; the
+k x dim literal array over the `quantized_vec` attribute (zero
+shuffle, zero join); the centroid update is ONE groupBy(cluster)
+with map-side partial aggregation down to k rows; the
 per-iteration driver sync collects exactly k rows (bounded metadata,
 the `plans/parity.py:789` 3-row-anchor convention). Nothing grows
 with the corpus except the two linear passes per iteration.
@@ -52,8 +52,8 @@ from .similarity import VEC_QUANT_SCALE
 
 def quantized_vec(vec_col: str) -> Column:
     """``array<bigint>`` quantization of a float/double vector column —
-    the exact expression `similarity._signature_bands` folds inline
-    (`similarity.py:128`), staged as a reusable array attribute.
+    the `similarity.VEC_QUANT_SCALE` rounding the LSH signature pass
+    and its SQL mirror apply, staged as a reusable array attribute.
     Takes a column NAME, not a Column: the expression goes through SQL
     text, and ``Column._jc.toString()`` is a debug string, not
     round-trippable SQL (the r5 advisor's jvm_udaf finding)."""

@@ -1,6 +1,6 @@
 """Similarity search (ANN) over an embedding column.
 
-Three tiers:
+Five top-k faces, all returning (query_id, neighbor_id, cos_sim, rank):
 
 - ``brute_force_topk`` — exact top-k by cosine: broadcast the (small)
   query set against the (huge) corpus, one narrow projection + a
@@ -15,10 +15,9 @@ Three tiers:
   candidate sets at the cost of probabilistic recall. The signature
   pass is INTEGER-QUANTIZED (vectors and hyperplanes quantized to
   int64), so every sign-bit dot product is an exact integer sum —
-  order-independent — and the two signature strategies (Arrow-batched
-  numpy matmul for production, Catalyst HOF fold for a pure-JVM tier)
-  are bit-identical to each other AND to a SQL mirror; given the seed
-  the whole pipeline is deterministic and oracle-checkable.
+  order-independent — and the Arrow-batched numpy matmul is
+  bit-identical to a SQL mirror; given the seed the whole pipeline is
+  deterministic and oracle-checkable.
 
 - ``ivf_topk`` — inverted-file index (IVF-flat): a seeded k-means
   coarse quantizer partitions the corpus into cells; each query probes
@@ -26,6 +25,14 @@ Three tiers:
   nprobe / n_cells, and the cell assignment doubles as the PHYSICAL
   partitioning key at scale (write the corpus bucketed by cell and a
   probe reads only matching partitions).
+
+- ``pq_topk`` / ``ivfpq_topk`` — product quantization: the scan reads
+  m-code rows only (asymmetric distance computation), over the whole
+  corpus or over the probed IVF cells.
+
+The faces share three building blocks: ``_exact_top_k`` (the exact
+cosine re-rank every face ends in), ``_probe_cells`` (IVF probe
+planning) and ``_adc_topk`` (the PQ scan).
 
 The hyperplanes / k-means seed are fixed => deterministic plans,
 reproducible runs.
@@ -39,9 +46,27 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
-from ..functions.vectors import cosine, dot
+from ..functions.vectors import cosine
 from ..session import fanout
+
+
+def _exact_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every top-k face ends in: ``pairs`` holds
+    candidate (query_id, qv, neighbor_id, cv) rows; returns
+    (query_id, neighbor_id, cos_sim, rank) with rank 1..k by
+    (round(cos,6) desc, neighbor_id) — rounding before ranking keeps
+    order ties engine-deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
 
 
 def brute_force_topk(
@@ -51,29 +76,16 @@ def brute_force_topk(
     vec_col: str,
     k: int = 10,
 ) -> DataFrame:
-    """Exact cosine top-k neighbors per query vector.
-
-    Returns (query_id, neighbor_id, cos_sim, rank) with rank 1..k by
-    (round(cos,6) desc, neighbor_id) — rounding before ranking keeps
-    order ties engine-deterministic."""
+    """Exact cosine top-k neighbors per query vector."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _exact_top_k(
+        c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id")),
+        k,
     )
 
 
@@ -102,74 +114,22 @@ def _int_hyperplanes(
     return [[int(v) for v in row] for row in np.floor(g * scale + 0.5).astype(np.int64)]
 
 
-def _signature_bands(df: DataFrame, vec_col: str, planes, bands: int, rows: int):
-    """Pure-JVM signature tier: sign-bit signature split into bands —
-    one (band_id, band_val) row per band, band_val packing `rows` sign
-    bits.
-
-    All hyperplane dots are computed in ONE two-level HOF pass over a
-    single constant-folded literal array holding every plane
-    (``P[j*dim + i]``): per-plane ``zip_with``+``aggregate`` pairs
-    (32 separate folds with per-element struct allocation) measured
-    2.5s for 2000 signatures at sf0.1, and fully-expanded literal
-    multiply-add chains (2048 arithmetic nodes) fell out of
-    whole-stage codegen entirely and were slower still. The
-    quantization stays INSIDE the fold on purpose: a staged
-    whole-array quantized alias is single-use, so CollapseProject
-    inlines it into the lambda and the entire array would be
-    re-quantized per element step (measured 2x slower for the
-    analogous cast). Bit-identical to ``_signature_bands_arrow`` —
-    integer sums are order-independent."""
-    n_planes = bands * rows
-    dim = len(planes[0])
-    flat = [int(v) for row in planes for v in row]
-    lits = ", ".join(f"{v}L" for v in flat)
-    dots_expr = (
-        f"transform(sequence(0, {n_planes - 1}), j -> "
-        f"aggregate(sequence(1, {dim}), CAST(0 AS BIGINT), (acc, i) -> "
-        f"acc + CAST(floor(CAST(element_at({vec_col}, i) AS DOUBLE) "
-        f"* {VEC_QUANT_SCALE!r}D + 0.5D) AS BIGINT) "
-        f"* element_at(array({lits}), j * {dim} + i)))"
-    )
-    # Stage the dot array as an ATTRIBUTE before the 32 bit tests
-    # reference it — an inline expression would be re-evaluated per
-    # reference (Catalyst does not share a repeated non-attribute).
-    staged = df.withColumn("__dots", F.expr(dots_expr))
-    bits = [
-        F.when(F.element_at(F.col("__dots"), i + 1) > 0, 1).otherwise(0).cast("long")
-        for i in range(n_planes)
-    ]
-    band_vals = []
-    for b in range(bands):
-        val = F.lit(0).cast("long")
-        for r in range(rows):
-            val = val.bitwiseOR(F.shiftleft(bits[b * rows + r], r))
-        band_vals.append(F.struct(F.lit(b).alias("band_id"), val.alias("band_val")))
-    return (
-        staged.select("*", F.explode(F.array(*band_vals)).alias("band"))
-        .select("*", "band.band_id", "band.band_val")
-        .drop("band", "__dots")
-    )
-
-
 def _signature_bands_arrow(df: DataFrame, vec_col: str, planes, bands: int, rows: int):
-    """Arrow-batched signature tier: the same integer sign-bit
-    signature computed as ONE numpy int64 matmul per Arrow batch —
-    (batch x dim) @ (dim x n_planes) — instead of 2048 interpreted
-    Catalyst lambda steps per row (~1000x less per-row CPU; measured
-    ~5x wall-clock on the sf0.1 headline query, where the HOF tier's
-    signature pass dominated). Integer arithmetic makes the matmul
-    bit-identical to the HOF fold and the SQL mirror regardless of
-    BLAS blocking/summation order — which is exactly why the
-    quantization exists: a float32/float64 matmul's summation order
-    is NOT mirrorable in SQL, so a float signature pass could never
-    carry the oracle hash signal this one does.
+    """Sign-bit signature split into bands — one (band_id, band_val)
+    row per band, band_val packing ``rows`` sign bits. All the
+    hyperplane dots are ONE numpy int64 matmul per Arrow batch —
+    (batch x dim) @ (dim x n_planes); a Catalyst fold of the same dots
+    (2048 interpreted lambda steps per row) measured ~5x slower
+    wall-clock on the sf0.1 headline query. Integer arithmetic makes
+    the matmul bit-identical to the SQL mirror regardless of BLAS
+    blocking/summation order — which is exactly why the quantization
+    exists: a float32/float64 matmul's summation order is NOT
+    mirrorable in SQL, so a float signature pass could never carry the
+    oracle hash signal this one does.
 
     Still a narrow per-row projection: zero shuffle, and the band
     explosion stays JVM-side (``posexplode`` of the returned
     ``array<bigint>``)."""
-    from pyspark.sql.types import ArrayType, LongType
-
     P = np.asarray(planes, dtype=np.int64)  # (n_planes, dim)
     weights = np.int64(1) << np.arange(rows, dtype=np.int64)
     n = bands * rows
@@ -271,6 +231,36 @@ def assign_ivf_cells_frozen(
     return df.withColumn("cell", F.array_min(F.array(*opts))["cell"])
 
 
+def _probe_cells(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    nprobe: int,
+) -> DataFrame:
+    """IVF probe planning, DISTRIBUTED: the tiny centroid table
+    (n_cells x dim floats) is broadcast against the query set and each
+    query's ``nprobe`` most cosine-similar cells (ties to the lowest
+    cell id) come from a rank-limited window — no driver ``collect()``
+    of the queries, so the query side may itself be a full table.
+    Returns (query_id, qv, cell), one row per probed cell."""
+    cent = queries.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cell int, cent_v array<double>",
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cell_sim").desc(), F.col("cell")
+    )
+    return (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("cell_sim", cosine("qv", "cent_v"))
+        .withColumn("__cr", F.row_number().over(w))
+        .filter(F.col("__cr") <= nprobe)
+        .select("query_id", "qv", "cell")
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -282,48 +272,18 @@ def ivf_topk(
     seed: int = 42,
 ) -> DataFrame:
     """IVF-flat ANN: search only the ``nprobe`` k-means cells nearest
-    each query. Probe planning is DISTRIBUTED: the tiny centroid table
-    (n_cells x dim floats) is broadcast against the query set and each
-    query's nprobe nearest cells come from a rank-limited window — no
-    driver ``collect()`` of the queries, so the query side may itself be
-    a full table (the former driver loop died silently at scale; now the
-    probe plan is just another Spark stage). The corpus side is filtered
-    to probed cells before any distance math. Returns
-    (query_id, neighbor_id, cos_sim, rank)."""
+    each query (``_probe_cells``). The corpus side is filtered to
+    probed cells before any distance math."""
     assigned, centroids = assign_ivf_cells(corpus, vec_col, n_cells, seed)
-    spark = corpus.sparkSession
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    cent = spark.createDataFrame(cent_rows, "cell int, cent_v array<double>")
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cell_sim").desc(), F.col("cell")
-    )
-    probe_q = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cell_sim", cosine("qv", "cent_v"))
-        .withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-
     c = assigned.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cell"
     )
     candidates = (
-        c.join(probe_q, "cell")
+        c.join(_probe_cells(queries, id_col, vec_col, centroids, nprobe), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "qv", "neighbor_id", "cv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _exact_top_k(candidates, k)
 
 
 def lsh_topk(
@@ -336,19 +296,14 @@ def lsh_topk(
     rows: int = 4,
     seed: int = 42,
     dim: int | None = None,
-    signature: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus rows sharing >= 1
     signature band with the query; exact cosine on candidates only.
 
     bands x rows hyperplanes; recall rises with bands (OR over bands),
-    precision of the candidate set with rows (AND within a band).
-
-    ``signature`` picks the (bit-identical) signature strategy:
-    ``"arrow"`` (default — numpy int64 matmul per Arrow batch, the
-    production path) or ``"hof"`` (pure-JVM Catalyst fold, no Python
-    workers in the plan; also the shape the SQL oracle mirrors
-    term-for-term).
+    precision of the candidate set with rows (AND within a band). The
+    signature pass is ``_signature_bands_arrow``, mirrored term for
+    term by the ``similarity_topk_bruteforce`` SQL oracle.
 
     ``dim`` (the embedding dimensionality) is required — array columns
     do not carry their length in the schema, and inferring it with
@@ -359,37 +314,24 @@ def lsh_topk(
             "columns do not carry a length in the schema and a "
             "first()-probe would cost an extra job per call"
         )
-    if signature not in ("arrow", "hof"):
-        raise ValueError(f"signature must be 'arrow' or 'hof', got {signature!r}")
-    sig_fn = _signature_bands_arrow if signature == "arrow" else _signature_bands
     planes = _int_hyperplanes(dim, bands * rows, seed)
-    # NULL vectors are excluded up front: they have no meaningful
-    # angle, and without the filter the two signature strategies would
-    # diverge on them (HOF folds NULLs to a degenerate all-zero
-    # signature that floods bucket 0; the matmul has nothing to stack)
+    # NULL vectors have no angle: drop them before the signature pass
+    # rather than ship them across the Arrow boundary for no bands
     c = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
     q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    cb = sig_fn(c, "cv", planes, bands, rows)
-    qb = sig_fn(q, "qv", planes, bands, rows)
+    cb = _signature_bands_arrow(c, "cv", planes, bands, rows)
+    qb = _signature_bands_arrow(q, "qv", planes, bands, rows)
     candidates = (
         cb.join(F.broadcast(qb), ["band_id", "band_val"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "qv", "neighbor_id", "cv")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        candidates.withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _exact_top_k(candidates, k)
 
 
 # ---------------------------------------------------------------------
@@ -479,6 +421,85 @@ def pq_encode(
     )
 
 
+def _adc_topk(
+    code_rows: DataFrame,
+    q: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    codebooks: list[list[list[float]]],
+    k: int,
+    adc_factor: int,
+    on: str | None = None,
+) -> DataFrame:
+    """The PQ scan — asymmetric distance computation (ADC) + exact
+    re-rank, FAISS-style but Spark-first. ``code_rows`` is
+    (neighbor_id, codes[, on]), ``q`` is (query_id, qv[, on]):
+
+    1. per query row, precompute the ADC lookup table ``tab[s*k+j] =
+       dot(q_s, c_sj)`` and ``|q|`` (one Arrow-batched einsum; tiny,
+       broadcast);
+    2. pair every query with the code rows — a cross join, or an
+       equi-join on ``on`` (the probed cell for IVF-PQ) — and score
+       each pair with m array lookups: an approximate cosine
+       ``sum_s tab / (|q| * sqrt(sum_s |c|^2))``, all JVM-side HOF
+       folds, no Python in the scan;
+    3. keep the top ``k * adc_factor`` per query by ADC score, join
+       back ONLY those candidates' true vectors and ``_exact_top_k``
+       (the standard refine step, so the emitted ``cos_sim`` is exact
+       and directly comparable to the other tiers)."""
+    books = np.asarray(codebooks, dtype=np.float64)  # (m, k, dsub)
+    m, kc, dsub = books.shape
+
+    def qbatches(it):
+        for pdf in it:
+            n = len(pdf)
+            qv = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf["qv"]]
+            ).reshape(n, m * dsub)
+            # tab[n, s, j] = dot(q_s, c_sj)
+            tab = np.einsum("nsd,skd->nsk", qv.reshape(n, m, dsub), books)
+            yield pdf.assign(
+                tab=list(tab.reshape(n, m * kc)), qnorm=np.sqrt((qv**2).sum(axis=1))
+            )
+
+    # a fresh StructType: q.schema.add() would mutate q's cached schema
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in q.schema.fields]
+        + [StructField("tab", ArrayType(DoubleType())), StructField("qnorm", DoubleType())]
+    )
+    qtab = F.broadcast(q.mapInPandas(qbatches, schema=schema))
+
+    def lookup(table):
+        # sum_s table[s*kc + codes[s]]: m element_at lookups, pure JVM
+        return F.aggregate(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            F.lit(0.0),
+            lambda acc, s: acc
+            + F.element_at(
+                table, (s * kc + F.element_at(F.col("codes"), s + 1) + 1).cast("int")
+            ),
+        )
+
+    norms = F.array(*[F.lit(float(x)) for x in (books**2).sum(axis=2).reshape(m * kc)])
+    pairs = code_rows.join(qtab, on) if on else code_rows.crossJoin(qtab)
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.col("__adc").desc(), F.col("neighbor_id")
+    )
+    cand = (
+        pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn(
+            "__adc",
+            lookup(F.col("tab")) / (F.col("qnorm") * F.sqrt(lookup(norms)) + F.lit(1e-12)),
+        )
+        .withColumn("__ar", F.row_number().over(w_adc))
+        .filter(F.col("__ar") <= k * adc_factor)
+        .select("query_id", "qv", "neighbor_id")
+    )
+    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    return _exact_top_k(cand.join(cv, "neighbor_id"), k)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -492,122 +513,17 @@ def pq_topk(
     seed: int = 42,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
-    """PQ ANN via asymmetric distance computation (ADC) + exact
-    re-rank — the FAISS-style scan, Spark-first:
-
-    1. encode the corpus to m-code rows (``pq_encode``; at 100 TB the
-       code table is the only thing the ADC stage reads — 4 bytes/row
-       here vs 256 for the raw float32 vector);
-    2. per query, precompute the ADC lookup table ``tab[s*k+j] =
-       dot(q_s, c_sj)`` and the codebook norm table (tiny, broadcast);
-    3. score every (query, code-row) pair with m array lookups — an
-       approximate cosine ``sum_s tab / (|q| * sqrt(sum_s |c|^2))``,
-       all JVM-side HOF folds, no Python in the scan;
-    4. keep the top ``k * adc_factor`` per query by ADC score, join
-       back ONLY those candidates' true vectors, exact-cosine re-rank
-       to k (the standard refine step, so the emitted ``cos_sim`` is
-       exact and directly comparable to the other tiers).
-
-    Compose with ``assign_ivf_cells`` for IVF-PQ: filter the code
-    table to probed cells before step 3."""
+    """PQ ANN over the whole corpus: encode it to m-code rows
+    (``pq_encode``; at 100 TB the code table is the only thing the ADC
+    stage reads — 4 bytes/row here vs 256 for the raw float32 vector)
+    and run the ``_adc_topk`` scan against every query."""
     if codebooks is None:
         codebooks = train_pq(corpus, vec_col, dim, m, k_codes, seed)
-    books = np.asarray(codebooks, dtype=np.float64)
-    m_, kc, dsub = books.shape
-    cent_norm2 = (books**2).sum(axis=2)  # (m, k)
-
-    codes = pq_encode(corpus, id_col, vec_col, codebooks).withColumnRenamed(
+    code_rows = pq_encode(corpus, id_col, vec_col, codebooks).withColumnRenamed(
         id_col, "neighbor_id"
     )
-
-    def qbatches(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series([], dtype="int64"),
-                        "qv": [],
-                        "tab": [],
-                        "qnorm": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            qv = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["qv"]]
-            )
-            sub = qv.reshape(n, m_, dsub)
-            # tab[n, s, j] = dot(q_s, c_sj)
-            tab = np.einsum("nsd,skd->nsk", sub, books)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].values,
-                    "qv": list(pdf["qv"]),
-                    "tab": list(tab.reshape(n, m_ * kc)),
-                    "qnorm": np.sqrt((qv**2).sum(axis=1)),
-                }
-            )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    qtab = q.mapInPandas(
-        qbatches,
-        schema=(
-            "query_id bigint, qv array<float>, tab array<double>, qnorm double"
-        ),
-    )
-
-    norms_lit = F.array(
-        *[F.lit(float(x)) for x in cent_norm2.reshape(m_ * kc)]
-    )
-    s_idx = F.sequence(F.lit(0), F.lit(int(m_) - 1))
-    # ADC dot + reconstructed norm: m element_at lookups each, pure JVM
-    adc_dot = F.aggregate(
-        s_idx,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("tab"), (s * kc + F.element_at(F.col("codes"), s + 1) + 1).cast("int")
-        ),
-    )
-    rec_n2 = F.aggregate(
-        s_idx,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            norms_lit, (s * kc + F.element_at(F.col("codes"), s + 1) + 1).cast("int")
-        ),
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(qtab))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "__adc",
-            adc_dot / (F.col("qnorm") * F.sqrt(rec_n2) + F.lit(1e-12)),
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("__ar", F.row_number().over(w_adc))
-        .filter(F.col("__ar") <= k * adc_factor)
-        .select("query_id", "qv", "neighbor_id")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(cv, "neighbor_id")
-        .withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    return _adc_topk(code_rows, q, corpus, id_col, vec_col, codebooks, k, adc_factor)
 
 
 def ivfpq_topk(
@@ -626,117 +542,19 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ: the two halves composed the way a production index is —
     the k-means coarse quantizer restricts each query to its ``nprobe``
-    cells (``assign_ivf_cells`` probe planning, candidate count ~
-    corpus * nprobe / n_cells), and within the probed cells the scan
-    reads only the m-byte PQ codes (ADC lookup tables), with an
-    exact-cosine re-rank of the top ADC candidates. At 100 TB: corpus
-    written bucketed by ``cell`` with the code column; a probe touches
-    nprobe buckets and never deserializes a raw vector until the
-    re-rank join."""
+    cells (``_probe_cells``, candidate count ~ corpus * nprobe /
+    n_cells), and within the probed cells the ``_adc_topk`` scan reads
+    only the m-byte PQ codes. At 100 TB: corpus written bucketed by
+    ``cell`` with the code column; a probe touches nprobe buckets and
+    never deserializes a raw vector until the re-rank join."""
     assigned, centroids = assign_ivf_cells(corpus, vec_col, n_cells, seed)
     codebooks = train_pq(corpus, vec_col, dim, m, k_codes, seed)
-    books = np.asarray(codebooks, dtype=np.float64)
-    m_, kc, dsub = books.shape
-    cent_norm2 = (books**2).sum(axis=2)
-
-    spark = corpus.sparkSession
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    cent = spark.createDataFrame(cent_rows, "cell int, cent_v array<double>")
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cell_sim").desc(), F.col("cell")
-    )
-    probe_q = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cell_sim", cosine("qv", "cent_v"))
-        .withColumn("__cr", F.row_number().over(wq))
-        .filter(F.col("__cr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-
-    def qbatches(it):
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {
-                        "query_id": pd.Series([], dtype="int64"),
-                        "qv": [],
-                        "cell": pd.Series([], dtype="int32"),
-                        "tab": [],
-                        "qnorm": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            qv = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["qv"]])
-            sub = qv.reshape(n, m_, dsub)
-            tab = np.einsum("nsd,skd->nsk", sub, books)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].values,
-                    "qv": list(pdf["qv"]),
-                    "cell": pdf["cell"].values,
-                    "tab": list(tab.reshape(n, m_ * kc)),
-                    "qnorm": np.sqrt((qv**2).sum(axis=1)),
-                }
-            )
-
-    qtab = probe_q.mapInPandas(
-        qbatches,
-        schema=(
-            "query_id bigint, qv array<float>, cell int, "
-            "tab array<double>, qnorm double"
-        ),
-    )
-
     codes = pq_encode(assigned, id_col, vec_col, codebooks)
     cells = assigned.select(F.col(id_col).alias("__cid"), "cell")
     code_rows = codes.join(
         cells, codes[id_col] == cells["__cid"]
     ).select(F.col(id_col).alias("neighbor_id"), "codes", "cell")
-
-    norms_lit = F.array(*[F.lit(float(x)) for x in cent_norm2.reshape(m_ * kc)])
-    s_idx = F.sequence(F.lit(0), F.lit(int(m_) - 1))
-    adc_dot = F.aggregate(
-        s_idx,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("tab"), (s * kc + F.element_at(F.col("codes"), s + 1) + 1).cast("int")
-        ),
-    )
-    rec_n2 = F.aggregate(
-        s_idx,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            norms_lit, (s * kc + F.element_at(F.col("codes"), s + 1) + 1).cast("int")
-        ),
-    )
-    scored = (
-        code_rows.join(F.broadcast(qtab), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "__adc", adc_dot / (F.col("qnorm") * F.sqrt(rec_n2) + F.lit(1e-12))
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("__ar", F.row_number().over(w_adc))
-        .filter(F.col("__ar") <= k * adc_factor)
-        .select("query_id", "qv", "neighbor_id")
-    )
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(cv, "neighbor_id")
-        .withColumn("cos_sim", F.round(cosine("cv", "qv"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    probe_q = _probe_cells(queries, id_col, vec_col, centroids, nprobe)
+    return _adc_topk(
+        code_rows, probe_q, corpus, id_col, vec_col, codebooks, k, adc_factor, on="cell"
     )

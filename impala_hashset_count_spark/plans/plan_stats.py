@@ -41,12 +41,32 @@ _PYTHON = re.compile(
 _SORT = re.compile(r"\bSort\b")
 
 
+def _initial_plan(plan: str) -> str:
+    """``plan`` without its AQE ``== Final Plan ==`` sections. Once a
+    frame has run, each ``AdaptiveSparkPlan`` prints its final plan
+    above its initial one; a section ends at the ``== Initial Plan ==``
+    marker in the same column, so nested adaptive plans are cut the
+    same way."""
+    out, skip_col = [], None
+    for line in plan.splitlines():
+        if skip_col is not None:
+            if line.find("== Initial Plan ==") != skip_col:
+                continue
+            skip_col = None
+        col = line.find("== Final Plan ==")
+        if col >= 0:
+            skip_col = col
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
 def plan_counts(df: DataFrame) -> dict[str, int]:
     """Structural node counts of the physical plan (AQE initial plan —
     deterministic for a fixed session config and input layout; nothing
-    executes). Keys: ``shuffles``, ``broadcasts``, ``python_stages``,
-    ``sorts``."""
-    s = df._jdf.queryExecution().executedPlan().toString()
+    executes, and a frame that has already run counts the same).
+    Keys: ``shuffles``, ``broadcasts``, ``python_stages``, ``sorts``."""
+    s = _initial_plan(df._jdf.queryExecution().executedPlan().toString())
     return {
         "shuffles": len(_SHUFFLE.findall(s)),
         "broadcasts": len(_BROADCAST.findall(s)),

@@ -241,59 +241,9 @@ def test_lsh_band_rows_equal_grouped_formulation(spark, sf_small, hash_fn):
     assert plan.index("array_distinct") < plan.index("array_min")
 
 
-def test_lsh_signature_strategies_bit_identical(spark, sf_small):
-    """The Arrow numpy-matmul signature pass and the pure-JVM Catalyst
-    fold must agree on EVERY band value — this is the property the
-    integer quantization buys (exact int64 sums are order-independent,
-    so matmul blocking vs left-fold cannot diverge), and it is what
-    lets the production Arrow tier inherit the SQL oracle's hash
-    signal."""
-    from impala_hashset_count_spark.operators.similarity import (
-        _int_hyperplanes,
-        _signature_bands,
-        _signature_bands_arrow,
-    )
-
-    e = load_table(spark, sf_small, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-    )
-    planes = _int_hyperplanes(64, 32, seed=42)
-    hof = {
-        (r.id, r.band_id, r.band_val)
-        for r in _signature_bands(e, "v", planes, 8, 4)
-        .select("id", "band_id", "band_val")
-        .collect()
-    }
-    arrow = {
-        (r.id, r.band_id, r.band_val)
-        for r in _signature_bands_arrow(e, "v", planes, 8, 4)
-        .select("id", "band_id", "band_val")
-        .collect()
-    }
-    assert len(hof) == e.count() * 8
-    assert arrow == hof
-
-
-def test_lsh_topk_strategy_equality(spark, sf_small):
-    """End-to-end: lsh_topk(signature='arrow') == lsh_topk('hof')."""
-    e = load_table(spark, sf_small, "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-
-    def canon(df):
-        return sorted(
-            (r.query_id, r.neighbor_id, r.cos_sim, r.rank) for r in df.collect()
-        )
-
-    a = canon(lsh_topk(e, q, "vec_id", "embedding", k=10, dim=64, signature="arrow"))
-    h = canon(lsh_topk(e, q, "vec_id", "embedding", k=10, dim=64, signature="hof"))
-    assert a == h
-    assert a, "candidate set should be non-empty"
-
-
-def test_lsh_topk_null_vectors_excluded_both_strategies(spark, sf_small):
+def test_lsh_topk_null_vectors_excluded(spark, sf_small):
     """A NULL embedding must be silently excluded from indexing (it
-    has no angle), identically under both signature strategies — not
-    crash the Arrow matmul or flood bucket 0 under the HOF fold."""
+    has no angle) — not crash the Arrow matmul or join any bucket."""
     e = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
     withnull = e.unionByName(
         spark.createDataFrame(
@@ -308,10 +258,9 @@ def test_lsh_topk_null_vectors_excluded_both_strategies(spark, sf_small):
         )
 
     base = canon(lsh_topk(e, e.filter(F.col("vec_id") < 5), "vec_id", "embedding", k=10, dim=64))
-    for sig in ("arrow", "hof"):
-        got = canon(lsh_topk(withnull, q, "vec_id", "embedding", k=10, dim=64, signature=sig))
-        assert got == base, sig
-        assert all(n != 999999 for _, n, _, _ in got)
+    got = canon(lsh_topk(withnull, q, "vec_id", "embedding", k=10, dim=64))
+    assert got == base
+    assert all(n != 999999 for _, n, _, _ in got)
 
 
 def test_lsh_topk_recall_vs_bruteforce(spark, sf_small):

@@ -160,3 +160,43 @@ def test_priority_sample_empty_and_all_null_keys(spark):
     assert priority_sample(empty, "key", "w", k=3).count() == 0
     nulls = spark.createDataFrame([(None, 5), (None, 7)], "key string, w bigint")
     assert priority_sample(nulls, "key", "w", k=3).count() == 0
+
+
+@pytest.fixture(scope="module")
+def embeddings(spark, sf_small):
+    from impala_hashset_count_spark.sources.tables import load_table
+
+    return load_table(spark, sf_small, "embeddings")
+
+
+@pytest.fixture(scope="module")
+def pq_books(embeddings):
+    from impala_hashset_count_spark.operators import train_pq
+
+    return train_pq(embeddings, "embedding", dim=64)
+
+
+def test_ann_faces_empty_queries(embeddings, pq_books):
+    """An empty query set runs every ANN face to an empty result."""
+    from pyspark.sql import functions as F
+
+    from impala_hashset_count_spark.operators import brute_force_topk, lsh_topk, pq_topk
+
+    e = embeddings
+    q = e.filter(F.col("vec_id") < 0)
+    assert brute_force_topk(e, q, "vec_id", "embedding").collect() == []
+    assert lsh_topk(e, q, "vec_id", "embedding", dim=64).collect() == []
+    assert pq_topk(e, q, "vec_id", "embedding", dim=64, codebooks=pq_books).collect() == []
+
+
+def test_pq_topk_sparse_query_partitions(embeddings, pq_books):
+    """Five queries over eight partitions leave empty Arrow batches in
+    the lookup-table pass; every query still gets its k neighbors."""
+    from pyspark.sql import functions as F
+
+    from impala_hashset_count_spark.operators import pq_topk
+
+    e = embeddings
+    q = e.filter(F.col("vec_id") < 5).repartition(8)
+    rows = pq_topk(e, q, "vec_id", "embedding", dim=64, k=10, codebooks=pq_books).collect()
+    assert len(rows) == 50

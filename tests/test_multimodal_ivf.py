@@ -1788,3 +1788,24 @@ def test_gif_roundtrip_features_spark_stage(spark, sf_small):
             for k in [(did + 3 * x + 7 * y + 11 * (nf - 1)) % 256]
         )
         assert r.out_sum == last
+
+
+def test_pq_faces_share_one_scorer(spark, sf_small):
+    """IVF-PQ probing every cell is PQ over the whole corpus — the same
+    codebooks, ADC scan and re-rank over the same candidates; probing
+    fewer cells drops candidates and changes the result. Small
+    codebooks (m=4 x 16 codes) keep the three trainings cheap."""
+    from impala_hashset_count_spark.operators.similarity import ivfpq_topk, pq_topk
+
+    e = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") < 5)
+    pq_args = dict(dim=64, k=10, m=4, k_codes=16)
+
+    def canon(df):
+        return sorted(map(tuple, df.collect()))
+
+    pq = canon(pq_topk(e, q, "vec_id", "embedding", **pq_args))
+    every_cell = ivfpq_topk(e, q, "vec_id", "embedding", n_cells=8, nprobe=8, **pq_args)
+    assert canon(every_cell) == pq
+    two_cells = ivfpq_topk(e, q, "vec_id", "embedding", n_cells=8, nprobe=2, **pq_args)
+    assert canon(two_cells) != pq

@@ -40,3 +40,13 @@ def test_python_stage_counted(spark):
 
     df = spark.range(100).mapInPandas(f, "id long")
     assert plan_counts(df)["python_stages"] == 1
+
+
+def test_counts_unchanged_after_execution(spark):
+    """An executed frame's plan string holds AQE's final plan above its
+    initial one; only the initial plan is counted, before and after."""
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("g")).count()
+    before = plan_counts(df)
+    df.collect()
+    assert plan_counts(df) == before
+    assert before["shuffles"] == 1
